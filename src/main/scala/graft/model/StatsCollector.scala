@@ -11,15 +11,28 @@ import org.apache.spark.sql.types._
   * Postgres stat probes (`StatQueries`, dqo/db/clients/postgres.py:65-238
   * and `Postgres.model`, postgres.py:321-377).
   *
-  * Scale design: ONE wide aggregation per table computes every column's
-  * count/nulls/distinct/min/max/moments in a single scan (the reference's
-  * combined per-table query, postgres.py:189-211); histograms take a
-  * second scan per table (they need min/max first), again one combined
-  * aggregation for all numeric columns via width_bucket. Distinct counts
-  * switch to approx_count_distinct at scale (`exact=false`) — HLL sketches
-  * merge in the combiner, so the shuffle stays O(columns), not O(rows).
-  * Timestamps are reduced to epoch seconds (postgres.py:177-186); strings
-  * contribute length and word-count distributions (postgres.py:141-172).
+  * Scale design: two scans per table over a NARROW layout. Each row is
+  * exploded into one `(cid, key, ma, mb)` record per model column: `cid`
+  * is the column's position, `key` a fixed-type struct of its value (null
+  * when the value is null, so distinct counts stay exact), and `ma`/`mb`
+  * its measure images (the numeric value, or a string's length and word
+  * count). Scan 1 is one `groupBy(cid)` computing count/nulls/distinct/
+  * min/max/mean of every column at once (the reference's combined
+  * per-table query, postgres.py:189-211); scan 2 joins a small local frame
+  * of per-column mean, width and histogram bounds and computes the moment
+  * sums and equi-width histogram counts from those columns.
+  *
+  * Why narrow: a wide aggregate with a few aggregates per column passes
+  * Spark's 100-field whole-stage-codegen limit on wide tables and falls
+  * back to interpreted evaluation, and baking each column's min/mean/width
+  * into the plan as literals makes every table compile its own classes.
+  * Here the aggregate's width and generated code depend on neither the
+  * schema nor the data, so it stays in codegen and compiles once per JVM.
+  * Distinct counts switch to approx_count_distinct at scale (`exact=false`;
+  * HLL hashes the key struct) — the sketches merge in the combiner, so the
+  * shuffle stays O(columns), not O(rows). Timestamps are reduced to epoch
+  * seconds (postgres.py:177-186); strings contribute length and word-count
+  * distributions (postgres.py:141-172).
   */
 object StatsCollector {
 
@@ -32,6 +45,54 @@ object StatsCollector {
     case DType.Float | DType.Number => Some(col(c.name).cast("double"))
     case DType.Time => Some(unix_seconds(col(c.name).cast("timestamp")).cast("double"))
     case _ => None
+  }
+
+  private val NoMeasure: Column = lit(null).cast(DoubleType)
+
+  /** The two measure images of a column: its numeric image, or a
+    * string's length and word count; null where the column has none.
+    */
+  private def images(c: ColumnModel): (Column, Column) = c.dtype match {
+    case DType.Str =>
+      val cc = col(c.name)
+      (length(cc).cast("double"), size(split(cc, "\\s+")).cast("double"))
+    case _ => (measure(c).getOrElse(NoMeasure), NoMeasure)
+  }
+
+  /** One slot per value family; every column fills exactly one. */
+  private val KeyType = StructType(Seq(StructField("i", LongType),
+    StructField("d", DoubleType), StructField("s", StringType), StructField("b", BooleanType)))
+
+  /** The column's value in its slot of [[KeyType]], null when the value is
+    * null. The image is injective per column type, so distinct counts
+    * are those of the raw values: integers, dates (days) and timestamps
+    * (microseconds) as longs, floats as doubles, and strings, decimals and
+    * local timestamps as their string form.
+    */
+  private def key(f: StructField): Column = {
+    val v = col(f.name)
+    val (slot, image) = f.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => "i" -> v.cast(LongType)
+      case DateType => "i" -> unix_date(v).cast(LongType)
+      case TimestampType => "i" -> unix_micros(v)
+      case FloatType | DoubleType => "d" -> v.cast(DoubleType)
+      case BooleanType => "b" -> v
+      case _ => "s" -> v.cast(StringType)
+    }
+    when(v.isNotNull, struct(KeyType.fields.toSeq.map(k =>
+      (if (k.name == slot) image else lit(null)).cast(k.dataType).as(k.name)): _*))
+  }
+
+  /** The narrow layout: one record per (row, column) of `cols`, which
+    * pairs each column with its cid. Scan 2 needs no key.
+    */
+  private def narrow(df: DataFrame, cols: Seq[(ColumnModel, Int)], withKey: Boolean): DataFrame = {
+    val fields = df.schema.fields.map(f => f.name -> f).toMap
+    df.select(inline(array(cols.map { case (c, cid) =>
+      val (a, b) = images(c)
+      val k = if (withKey) Seq(key(fields(c.name)).as("key")) else Nil
+      struct(Seq(lit(cid).as("cid")) ++ k ++ Seq(a.as("ma"), b.as("mb")): _*)
+    }: _*)))
   }
 
   /** Scan-1 aggregates per measure: min/max plus a DECIMAL-exact mean.
@@ -49,9 +110,9 @@ object StatsCollector {
     * below that (per-token probabilities, sub-micro rates) would mean
     * to 0 silently — rescale such columns before feeding the model.
     */
-  private def numAggs(prefix: String, m: Column): Seq[Column] = Seq(
-    min(m).as(s"${prefix}_min"), max(m).as(s"${prefix}_max"),
-    avg(m.cast("decimal(38,6)")).cast("double").as(s"${prefix}_mean"))
+  private def numAggs(m: String): Seq[Column] = Seq(
+    min(m).as(s"${m}_min"), max(m).as(s"${m}_max"),
+    avg(col(m).cast("decimal(38,6)")).cast("double").as(s"${m}_mean"))
 
   /** Scan-2 aggregates for one measure: exact decimal sums of the first
     * four powers of u = (x - mean)/width. |u| <= 1, so the quartic can
@@ -60,11 +121,11 @@ object StatsCollector {
     * any realistic row count); skew/kurt are scale-free so the
     * normalization cancels, and the variance rescales by width².
     */
-  private def momentAggs(key: String, m: Column, mean: Double, width: Double): Seq[Column] = {
-    val u = (m - lit(mean)) / lit(width)
+  private def momentAggs(m: String): Seq[Column] = {
+    val u = (col(m) - col(s"${m}_mean")) / col(s"${m}_width")
     val u2 = u * u
     Seq("s1" -> u, "s2" -> u2, "s3" -> (u2 * u), "s4" -> (u2 * u2))
-      .map { case (n, c) => sum(c.cast("decimal(38,18)")).as(s"${key}__$n") }
+      .map { case (n, c) => sum(c.cast("decimal(38,18)")).as(s"${m}__$n") }
   }
 
   /** Driver-side combine of the scan-2 sums into (var_samp, skewness,
@@ -102,111 +163,106 @@ object StatsCollector {
   private def indexed(table: String, colName: String): Boolean =
     colName == "id" || colName.endsWith("key") || colName.endsWith("_id")
 
+  /** Per-column parameters of scan 2, one row per cid that has a
+    * measure to sum: mean and width of each measure (null where it has
+    * none) and the histogram's lower bound and bucket width.
+    */
+  private val ParamsType = StructType(StructField("cid", IntegerType) +:
+    Seq("ma_mean", "ma_width", "mb_mean", "mb_width", "h_min", "h_width")
+      .map(StructField(_, DoubleType)))
+
   /** Collect full stats for one table in two scans. */
   def collectTable(dfIn: DataFrame, name: String, sizeBytes: Long,
                    exact: Boolean = true): TableModel = {
-    // Parallelize small single-split sources: the exact-distinct Expand
-    // multiplies rows by the distinct-agg count, and on one partition the
-    // whole wide aggregate runs on one core (observed 51s for sf0.1
-    // lineitem before this). Large inputs keep their natural splits.
+    // Parallelize small single-split sources: on one partition the whole
+    // aggregate runs on one core (observed 51s for sf0.1 lineitem before
+    // this). Large inputs keep their natural splits.
     val df = graft.ops.Spread(dfIn)
+    val spark = df.sparkSession
     val schema = TableModel(name,
       df.schema.fields.toSeq.flatMap(f =>
         DType.fromSpark(f.dataType).map(ColumnModel(f.name, _))))
-    val nRowsCol = count(lit(1))
-
-    def distinctAgg(c: Column): Column =
-      if (exact) count_distinct(c) else approx_count_distinct(c, 0.01)
-
-    // every moment-bearing measure: numeric/time columns plus the string
-    // length and word-count distributions (key, expr, count-field)
-    def strMeasures(c: ColumnModel): Seq[(String, Column)] = {
-      val cc = col(c.name)
-      Seq(s"${c.name}__len" -> length(cc).cast("double"),
-        s"${c.name}__wc" -> size(split(cc, "\\s+")).cast("double"))
-    }
-    val allMeasures: Seq[(String, Column, String)] =
-      schema.columns.flatMap { c =>
-        measure(c).map(m => (c.name, m, c.name)).toSeq ++
-          (if (c.dtype == DType.Str) strMeasures(c).map { case (k, m) => (k, m, c.name) }
-           else Nil)
-      }
+    val cols = schema.columns.zipWithIndex
 
     // ---- scan 1: counts + min/max + exact means for every column at once
-    var aggs = Seq[Column](nRowsCol.as("__rows"))
-    schema.columns.foreach { c =>
-      val cc = col(c.name)
-      aggs :+= count(cc).as(s"${c.name}__n")
-      aggs :+= distinctAgg(cc).as(s"${c.name}__nd")
-    }
-    allMeasures.foreach { case (k, m, _) => aggs ++= numAggs(k, m) }
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    val nRows = r.getAs[Long]("__rows")
+    val distinctAgg =
+      if (exact) count_distinct(col("key")) else approx_count_distinct(col("key"), 0.01)
+    val s1 = if (cols.isEmpty) Map.empty[Int, Row]
+      else narrow(df, cols, withKey = true).groupBy("cid")
+        .agg(count(lit(1)).as("rows"), Seq(count("key").as("n"), distinctAgg.as("nd")) ++
+          numAggs("ma") ++ numAggs("mb"): _*)
+        .collect().map(r => r.getAs[Int]("cid") -> r).toMap
+    // every column emits one record per row, so any cid counts the rows
+    val nRows = if (cols.isEmpty) df.count()
+      else s1.values.headOption.fold(0L)(_.getAs[Long]("rows"))
+    def stat(cid: Int, f: String): Double = s1.get(cid).fold(Double.NaN)(getD(_, f))
+    def countOf(cid: Int, f: String): Long = s1.get(cid).fold(0L)(_.getAs[Long](f))
 
     // ---- scan 2: central-moment sums for every measure + equi-width
     // histograms for the numeric/time columns, ONE combined aggregation
-    val momentTargets = allMeasures
-      .map { case (k, m, nk) =>
-        (k, m, nk, getD(r, s"${k}_min"), getD(r, s"${k}_max"), getD(r, s"${k}_mean")) }
-      .filter { case (_, _, _, mn, mx, _) => !mn.isNaN && !mx.isNaN }
-    val histTargets = schema.columns.filter(c => measure(c).isDefined)
-      .map(c => c -> (getD(r, s"${c.name}_min"), getD(r, s"${c.name}_max")))
-      .filter { case (_, (mn, mx)) => !mn.isNaN && !mx.isNaN }
-    var moments = Map.empty[String, (Double, Double, Double)]
-    var hists = Map.empty[String, (Seq[Double], Seq[Long])]
-    if (momentTargets.nonEmpty) {
-      var sAggs = Seq.empty[Column]
-      momentTargets.foreach { case (k, m, _, mn, mx, mean) =>
-        sAggs ++= momentAggs(k, m, mean, if (mx > mn) mx - mn else 1.0)
-      }
+    def range(cid: Int, m: String): Option[(Double, Double)] = {
+      val (mn, mx) = (stat(cid, s"${m}_min"), stat(cid, s"${m}_max"))
+      if (mn.isNaN || mx.isNaN) None else Some((mn, mx))
+    }
+    // (mean, width) of a measure with values; a column without the
+    // measure has none (its image is null)
+    def moment(cid: Int, m: String): Option[(Double, Double)] =
+      range(cid, m).map { case (mn, mx) => (stat(cid, s"${m}_mean"), if (mx > mn) mx - mn else 1.0) }
+    val params = cols.flatMap { case (c, cid) =>
+      val (a, b) = (moment(cid, "ma"), moment(cid, "mb"))
+      val h = if (measure(c).isDefined) range(cid, "ma") else None
+      def box(v: Option[Double]): Any = v.map(Double.box).orNull
+      if (a.isEmpty && b.isEmpty) None
+      else Some(Row(cid, box(a.map(_._1)), box(a.map(_._2)), box(b.map(_._1)), box(b.map(_._2)),
+        box(h.map(_._1)), box(h.map { case (mn, mx) => (mx + 1.0 - mn) / HistBuckets })))
+    }
+    val s2 = if (params.isEmpty) Map.empty[Int, Row] else {
+      val byCid = params.map(_.getInt(0)).toSet
+      // one partition: broadcasting the frame then runs one task, not one
+      // per core
+      val local = spark.createDataFrame(java.util.Arrays.asList(params: _*), ParamsType).coalesce(1)
       // width_bucket(v, min, max+1, 10) semantics (postgres.py:122-138):
       // per column, 10 conditional counts
-      histTargets.foreach { case (c, (mn, mx)) =>
-        val m = measure(c).get
-        val w = (mx + 1.0 - mn) / HistBuckets
-        (1 to HistBuckets).foreach { b =>
-          val lo = mn + (b - 1) * w; val hi = mn + b * w
-          sAggs :+= sum(when(m >= lo && m < hi, 1L).otherwise(0L)).as(s"${c.name}__h$b")
-        }
+      val hmin = col("h_min"); val hw = col("h_width")
+      val bucketAggs = (1 to HistBuckets).map { b =>
+        val lo = hmin + lit((b - 1).toDouble) * hw; val hi = hmin + lit(b.toDouble) * hw
+        sum(when(col("ma") >= lo && col("ma") < hi, 1L).otherwise(0L)).as(s"h$b")
       }
-      val hr = df.agg(sAggs.head, sAggs.tail: _*).head()
-      moments = momentTargets.map { case (k, _, nk, mn, mx, _) =>
-        k -> combineMoments(r.getAs[Long](s"${nk}__n"),
-          if (mx > mn) mx - mn else 1.0,
-          getD(hr, s"${k}__s1"), getD(hr, s"${k}__s2"),
-          getD(hr, s"${k}__s3"), getD(hr, s"${k}__s4"))
-      }.toMap
-      hists = histTargets.map { case (c, (mn, mx)) =>
-        val w = (mx + 1.0 - mn) / HistBuckets
-        val bounds = (1 to HistBuckets).map(b => mn + b * w)
-        val freqs = (1 to HistBuckets).map(b => hr.getAs[Long](s"${c.name}__h$b"))
-        c.name -> (bounds, freqs)
-      }.toMap
+      val aggs = momentAggs("ma") ++ momentAggs("mb") ++ bucketAggs
+      narrow(df, cols.filter { case (_, cid) => byCid(cid) }, withKey = false)
+        .join(broadcast(local), "cid")
+        .groupBy("cid").agg(aggs.head, aggs.tail: _*)
+        .collect().map(r => r.getAs[Int]("cid") -> r).toMap
     }
 
-    def numStats(p: String): NumericStats = {
-      val (v, sk, ku) = moments.getOrElse(p, (Double.NaN, Double.NaN, Double.NaN))
-      NumericStats(getD(r, s"${p}_min"), getD(r, s"${p}_mean"), getD(r, s"${p}_max"),
+    def numStats(cid: Int, m: String): NumericStats = {
+      val (v, sk, ku) = (for (r <- s2.get(cid); (_, width) <- moment(cid, m))
+        yield combineMoments(countOf(cid, "n"), width,
+          getD(r, s"${m}__s1"), getD(r, s"${m}__s2"),
+          getD(r, s"${m}__s3"), getD(r, s"${m}__s4")))
+        .getOrElse((Double.NaN, Double.NaN, Double.NaN))
+      NumericStats(stat(cid, s"${m}_min"), stat(cid, s"${m}_mean"), stat(cid, s"${m}_max"),
         v, sk, ku)
     }
 
-    val cols = schema.columns.map { c =>
-      val n = r.getAs[Long](s"${c.name}__n")
-      val nd = r.getAs[Long](s"${c.name}__nd")
+    val columns = cols.map { case (c, cid) =>
       val numeric = measure(c).map { _ =>
-        val base = numStats(c.name)
-        hists.get(c.name) match {
-          case Some((h, f)) => base.copy(hist = h, freq = f)
-          case None => base
+        val base = numStats(cid, "ma")
+        (s2.get(cid), range(cid, "ma")) match {
+          case (Some(r), Some((mn, mx))) =>
+            val w = (mx + 1.0 - mn) / HistBuckets
+            base.copy(hist = (1 to HistBuckets).map(b => mn + b * w),
+              freq = (1 to HistBuckets).map(b => r.getAs[Long](s"h$b")))
+          case _ => base
         }
       }
       val string = if (c.dtype == DType.Str)
-        Some(StringStats(numStats(s"${c.name}__len"), numStats(s"${c.name}__wc")))
+        Some(StringStats(numStats(cid, "ma"), numStats(cid, "mb")))
       else None
-      c.copy(stats = Some(ColumnStats(nRows, nRows - n, nd, indexed(name, c.name),
-        numeric, string)))
+      c.copy(stats = Some(ColumnStats(nRows, nRows - countOf(cid, "n"), countOf(cid, "nd"),
+        indexed(name, c.name), numeric, string)))
     }
-    TableModel(name, cols, Some(TableStats(nRows, sizeBytes)))
+    TableModel(name, columns, Some(TableStats(nRows, sizeBytes)))
   }
 
   private def getD(r: Row, field: String): Double = {

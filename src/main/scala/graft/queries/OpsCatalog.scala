@@ -898,17 +898,19 @@ object OpsCatalog {
       // pass's short tasks leave idle. synopsize() collects eagerly
       // inside, so each Future is a self-contained job set; results are
       // deterministic regardless of interleaving.
-      import scala.concurrent.Future
       import scala.concurrent.duration.DurationInt
       import scala.concurrent.ExecutionContext.Implicits.global
-      val wholeF = Future(IncrementalStats.synopsize(li, anchors))
+      val group = s"q84_incremental_stats-${java.util.UUID.randomUUID()}"
+      val wholeF = Futures.race(s.sparkContext, s"$group/whole")(
+        IncrementalStats.synopsize(li, anchors))
       // all 3 shards in ONE grouped pass (the backfill shape), then
       // merged exactly as separately-arriving shard synopses would be
-      val partsF = Future(IncrementalStats.synopsizeGrouped(li,
-        pmod(col("o_orderkey"), lit(3)), anchors))
+      val partsF = Futures.race(s.sparkContext, s"$group/parts")(
+        IncrementalStats.synopsizeGrouped(li, pmod(col("o_orderkey"), lit(3)), anchors))
       // FINITE bound (was Duration.Inf — a wedged concurrent job hung the
-      // query forever): generously above any sane synopsis pass, with a
-      // deterministic sequential recomputation as the fallback
+      // query forever): generously above any sane synopsis pass; a timed-
+      // out pass has its job group cancelled, then a deterministic
+      // sequential recomputation is the fallback
       val whole = Futures.awaitOr(wholeF, 1.hour)(
         IncrementalStats.synopsize(li, anchors))
       val parts = Futures.awaitOr(partsF, 1.hour)(
