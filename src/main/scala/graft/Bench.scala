@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Headliners cover every operator family at its
   * intended scale path (scan/filter/join/agg, stats collection, dedup via
@@ -21,7 +19,7 @@ object Bench {
     * relaunches streams INTO the capture window (exactly how the r15
     * capture died — streams launched at 23:37/23:43 around a 23:36
     * capture start). Matching is exact-argv-token (split on
-    * whitespace), mirroring disk_guard.sh's awk approach, so a
+    * whitespace), as the fleet's own disk guard matched, so a
     * coincidental `grep -E 'TailCampaign|FailedRetry'` in some shell's
     * argv can not false-positive.
     */
@@ -77,7 +75,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // contamination guard (round-15 verdict #1): a capture on a
     // fleet-loaded box is not a measurement. Scan at start AND again
     // after the timed runs (below) — r15's contamination arrived
@@ -89,14 +86,7 @@ object Bench {
       System.err.println("[bench] WARNING: campaign processes resident at " +
         s"start — capture will be stamped contaminated: " +
         contaminatedAtStart.mkString(", "))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val all = SparkEntry.queries
     // warm the JVM/codegen once so per-query numbers measure the engine,
     // not first-call class loading (same protocol as the reference's
@@ -189,11 +179,8 @@ object Bench {
 
     // cpus is stamped so a capture at the local[4] default can never be
     // mistaken for a local[32] one (the round-8 "q42 regression" was
-    // exactly that mixup). The env value is a raw master string — "*"
-    // (local[*]) is legitimate — so non-numeric values are quoted to
-    // keep the artifact valid JSON
-    val cpusJson = scala.util.Try(cpus.trim.toInt.toString)
-      .getOrElse("\"" + cpus + "\"")
+    // exactly that mixup)
+    val cpus = Session.cpus
     // second contamination scan: the fleet can arrive mid-capture (r15:
     // babysitter launched streams one minute after the capture started)
     val contaminated = (contaminatedAtStart ++ residentCampaign()).distinct
@@ -204,7 +191,7 @@ object Bench {
       if (contaminated.isEmpty) "false"
       else "true,\"contaminants\":" +
         contaminated.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$sp,"sf":"$sfDir","cpus":$cpusJson,"contaminated":$contamJson,"parse_qps":$parseQps,"encode_qps":$encodeQps}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$sp,"sf":"$sfDir","cpus":$cpus,"contaminated":$contamJson,"parse_qps":$parseQps,"encode_qps":$encodeQps}"""
     // The driver captures a bounded TAIL of stdout (~2 KB) and parses the
     // last line into BENCH_r*.json; the full-name queries+spread line is
     // ~5 KB, so the round artifact used to end up truncated mid-map with
@@ -226,7 +213,7 @@ object Bench {
     val totalR = (math.rint(total * 1000) / 1000).toString
     val parseR = (math.rint(parseQps * 10) / 10).toString
     val encodeR = (math.rint(encodeQps * 10) / 10).toString
-    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qsShort,"spread_max":$spreadMax,"sf":"$sfDir","cpus":$cpusJson,"contaminated":$contamJson,"parse_qps":$parseR,"encode_qps":$encodeR}""")
+    println(s"""{"metric":"total","value":$totalR,"unit":"sec","queries":$qsShort,"spread_max":$spreadMax,"sf":"$sfDir","cpus":$cpus,"contaminated":$contamJson,"parse_qps":$parseR,"encode_qps":$encodeR}""")
     val benchOut =
       if (sys.env.get("GRAFT_BENCH_LOCAL").contains("1")) "BENCH_LOCAL.json"
       else "/tmp/graft_bench_last.json"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,17 +8,7 @@ object Verify {
     // optional third arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet stores TIMESTAMP(NANOS) which Spark refuses by
-      // default; read as epoch-nanos LONG instead (queries divide by 1e9).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // testdata-change tripwire: round 6 lost six green queries to a
     // silent canon regeneration — make the next one loud and immediate
     val fp = Tables.canonFingerprint(sfDir)

@@ -86,38 +86,6 @@ object Scoring {
     }
   }
 
-  /** Max-of-families screen nominator for active sampling
-    * ([[graft.lab.TailCampaign]]'s measurement screen): one predictor
-    * per checkpoint, returning the LARGEST log2 estimate any family
-    * produces for the SQL. The tail hunter's expensive failure mode is
-    * an UNDER-estimate — a true 40 s candidate predicted sub-second is
-    * rejected unmeasured, and the families err independently (the v20
-    * regressor's class-7 drift runs ~2.5× its mid-band drift,
-    * data/band/DRIFT.md), so either family may nominate. Classifier
-    * checkpoints here are trained on ROUNDED log2 buckets
-    * ([[Estimator.runtimeBucket]] = floor(log2 + 0.5)): bucket `b`
-    * covers log2 in [b - 0.5, b + 0.5), whose center in log2 space is
-    * exactly `b` — so the classifier's predicted bucket enters the max
-    * UNSHIFTED. (The reference's Log2Partitioner floors instead, where
-    * the center would be b + 0.5; a +0.5 shift here would bias every
-    * classifier vote +0.5 log2 ≈ ×1.41 in seconds — enough to push a
-    * correct near-ceiling vote past the screen's upper bound and
-    * reject a true in-band candidate unmeasured.) A family that cannot
-    * encode the SQL abstains (NaN); the result is NaN only when every
-    * family abstains.
-    */
-  def maxPredictorFor(modelJsons: Seq[String], statsJson: String): String => Double = {
-    require(modelJsons.nonEmpty, "at least one checkpoint required")
-    val families = modelJsons.map { j =>
-      val p = predictorFor(j, statsJson)
-      (sql: String) => scala.util.Try(p(sql)).getOrElse(Double.NaN)
-    }
-    sql => {
-      val ests = families.map(_(sql)).filterNot(_.isNaN)
-      if (ests.isEmpty) Double.NaN else ests.max
-    }
-  }
-
   // the shared narrow map: (sql, log2 prediction), NaN for rows whose
   // SQL does not parse or bind — a scorer that silently dropped rows
   // would corrupt any downstream join on the workload

@@ -40,30 +40,16 @@ object BandCampaign {
   val tables: Seq[String] =
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 
-  private[lab] def session(cores: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   /** Phase 1 (full parallelism): synthesize the `factor`× database and
     * cache its exact stats model — campaign PREP, not the thing being
     * measured, so it runs on all cores whatever the measurement budget.
     * Idempotent: reruns at any compute budget skip straight to the
-    * measurement phase. Returns the scaled directory. Shared with
-    * [[TailCampaign]] so both campaign shapes measure the same world.
+    * measurement phase. Returns the scaled directory.
     */
-  private[lab] def ensureScaled(baseSfDir: String, factor: Double,
-                                workDir: String): String = {
+  private def ensureScaled(baseSfDir: String, factor: Double, workDir: String): String = {
     val scaledDir = s"$workDir/x${factor.toInt}"
     if (!Files.exists(Paths.get(s"$scaledDir/stats.json"))) {
-      val prep = session("32")
+      val prep = graft.Session.local(32)
       graft.Tables.registerAll(prep, baseSfDir)
       val baseDb = StatsCollector.collect(prep, baseSfDir, tables)
       if (!Files.exists(Paths.get(s"$scaledDir/_done"))) {
@@ -86,10 +72,9 @@ object BandCampaign {
   }
 
   /** Register the scaled tables as views on `spark` and return the
-    * cached stats model (phase-2 setup, shared with [[TailCampaign]]).
+    * cached stats model (phase-2 setup).
     */
-  private[lab] def openScaled(spark: SparkSession,
-                              scaledDir: String): graft.model.DbModel = {
+  private def openScaled(spark: SparkSession, scaledDir: String): graft.model.DbModel = {
     tables.foreach(t =>
       spark.read.parquet(s"$scaledDir/$t.parquet").createOrReplaceTempView(t))
     StatsCollector.collect(spark, scaledDir, tables,
@@ -106,12 +91,12 @@ object BandCampaign {
     // (after `factor`) for pushing runtimes into the reference's 1-256 s
     // band: the reference measured a single Postgres backend, so a
     // query's compute budget there was a couple of cores, not 32.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Session.cpus
     val scaledDir = ensureScaled(baseSfDir, factor, workDir)
 
     // ---- phase 2 (budgeted): measure + train -----------------------
     println(s"[band] measurement session: local[$cpus]")
-    val spark = session(cpus)
+    val spark = graft.Session.local(cpus)
     val db = openScaled(spark, scaledDir)
 
     // 4. balanced campaign against real execution in the scaled world.

@@ -161,50 +161,10 @@ object Campaign {
       gen.counts.toSeq, usable.map(_._2), rAcc, rMae, rF1)
   }
 
-  /** Close the campaign's own loop: stamp a SERVED estimator
-    * checkpoint's predictions onto a measured workload and return the
-    * per-query drift — the engine-side analog of the reference's
-    * estimate.py batch-applying predictions to workload CSVs and X3's
-    * rerun drift report (dqo/lab/query_executor.py:206-290, which
-    * re-times logged queries and compares against the logged runtime;
-    * here the comparison is prediction vs measurement instead).
-    *
-    * Output columns: `sql`, `runtime_sec` (measured), `log2_seconds` /
-    * `est_seconds` (the checkpoint's prediction,
-    * [[graft.estimate.Scoring.scoreWorkloadAny]] — distributed,
-    * broadcast-text checkpoints, zero collects), and `drift_log2` =
-    * |predicted − actual| in log2 space (the band's MAE unit; measured
-    * runtimes are floored at 1 ms so a degenerate zero can't produce an
-    * infinite drift).
-    */
-  def driftReport(spark: SparkSession, measured: Seq[(String, Double)],
-                  modelJson: String, statsJson: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // keep-first dedup on the SQL text (CheckpointMerge's convention):
-    // the per-generator memos don't dedup ACROSS generators, and a
-    // duplicate SQL would fan the self-join below out to n² rows per
-    // copy, skewing the bucket counts and drift means
-    val workload = measured.distinctBy(_._1).toDF("sql", "runtime_sec")
-    graft.estimate.Scoring.scoreWorkloadAny(spark, workload, "sql",
-        modelJson, statsJson)
-      .join(workload, "sql")
-      .withColumn("drift_log2",
-        abs(col("log2_seconds") -
-          log(2.0, greatest(col("runtime_sec"), lit(1e-3)))))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val n = args.lift(1).map(_.toInt).getOrElse(25)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val r = run(spark, sfDir, n, args.lift(2))
     println(f"[campaign] n=${r.nMeasured} train(${r.nTrain}): acc=${r.trainAcc}%.3f " +
       f"mae=${r.trainMae}%.3f f1=${r.trainF1}%.3f | heldout(${r.nTest}): " +

@@ -39,12 +39,7 @@ object CurationRehearsal {
   def main(args: Array[String]): Unit = {
     val baseN = args.lift(0).map(_.toLong).getOrElse(2000000L)
     val k = 100
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(16)
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

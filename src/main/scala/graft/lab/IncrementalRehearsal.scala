@@ -1,6 +1,5 @@
 package graft.lab
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
@@ -16,21 +15,15 @@ import graft.ops.Dedup
 object IncrementalRehearsal {
   def main(args: Array[String]): Unit = {
     val corpusN = args.headOption.map(_.toLong).getOrElse(5000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val warehouse = java.nio.file.Files.createTempDirectory("increh").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(extra = Map(
+      "spark.sql.warehouse.dir" -> warehouse,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
 
     val corpus = ScaleRehearsal.syntheticDocs(spark, corpusN)
     val t0 = System.nanoTime()
     Dedup.buildLshIndex(corpus, "doc_id", "text", k = 8, shingleN = 3, bands = 4,
-      table = "inc_idx", path = s"$warehouse/inc_idx", numBuckets = cpus.toInt)
+      table = "inc_idx", path = s"$warehouse/inc_idx", numBuckets = graft.Session.cpus)
     val buildSec = (System.nanoTime() - t0) / 1e9
 
     println(s"| corpusN | batchN | probe_sec | cand_pairs |")

@@ -36,12 +36,7 @@ object RangeJoinRehearsal {
   def main(args: Array[String]): Unit = {
     val baseN = args.lift(0).map(_.toLong).getOrElse(1000000L)
     val m = args.lift(1).map(_.toLong).getOrElse(10000L)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(16)
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

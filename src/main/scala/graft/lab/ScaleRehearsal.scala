@@ -101,13 +101,7 @@ object ScaleRehearsal {
 
   def main(args: Array[String]): Unit = {
     val baseN = args.headOption.map(_.toLong).getOrElse(500L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     // the reliable-CC rehearsal checkpoints to a real directory (on a
     // cluster this is durable storage; locally a temp dir stands in,
     // deleted at exit — reliable checkpoints outlive the session by

@@ -1,6 +1,5 @@
 package graft.lab
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.IncrementalStats
@@ -21,13 +20,7 @@ object SynopsisRehearsal {
 
   def main(args: Array[String]): Unit = {
     val baseN = args.headOption.map(_.toLong).getOrElse(200000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val anchors = Map(
       "a" -> (0.0, 1.0), "b" -> (0.0, 1000.0), "c" -> (-500.0, 1000.0))

@@ -24,8 +24,8 @@ import org.apache.spark.sql.types._
   *    reference's semantics-changing branches (e.g. LIKE-drop) stay
   *    encoder-side in graft.ir where they only shape features.
   *
-  * Registered through [[GraftExtensions]]
-  * (`SparkSession.builder.withExtensions(new GraftExtensions)` or conf
+  * Registered through [[GraftExtensions]] (a session builder's
+  * `withExtensions(new GraftExtensions)` or conf
   * `spark.sql.extensions=graft.plans.GraftExtensions`).
   */
 final case class HistogramAgg(

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.estimate.Estimator
 import graft.gen.BalancedCheckpoint
 import graft.model.ModelJson
@@ -30,12 +28,7 @@ object MlpSweep {
     val usable = cp.results.filter(_._2 > 0)
     println(s"[sweep] ${usable.size} measured runtimes from $cpPath")
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
 
     val (test, train) = usable.partition { case (sql, _) =>
       val c = new java.util.zip.CRC32(); c.update(sql.getBytes("UTF-8"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Testdata-change tripwire. The driver regenerates `/root/testdata`
@@ -12,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * that says exactly what to do.
   */
 class TestdataCanonSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("sf0.01 canon fingerprint matches the golden pin") {
     val dir = "/root/testdata/sf0.01"

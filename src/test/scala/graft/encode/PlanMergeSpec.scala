@@ -1,6 +1,5 @@
 package graft.encode
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Tables
@@ -99,16 +98,9 @@ class PlanMergeSpec extends AnyFunSuite {
   }
 
   test("end-to-end: real executed plan reorders the join; merged encoding differs") {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // deterministic physical shape: no broadcast conversion, so the
-      // join order is exactly what ReorderJoin picked from FROM order
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // deterministic physical shape: no broadcast conversion, so the
+    // join order is exactly what ReorderJoin picked from FROM order
+    val spark = graft.LocalSpark.session("spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val dir = "/root/testdata/sf0.001"
     Tables.registerAll(spark, dir)
 

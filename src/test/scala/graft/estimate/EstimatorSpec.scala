@@ -1,6 +1,5 @@
 package graft.estimate
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model._
@@ -10,13 +9,7 @@ import graft.model._
   * width stable across queries.
   */
 class EstimatorSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   private def col(name: String, t: DType) = ColumnModel(name, t,
     Some(ColumnStats(1000, 0, 100, index = false,

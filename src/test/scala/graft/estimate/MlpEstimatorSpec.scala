@@ -1,6 +1,5 @@
 package graft.estimate
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The MLP bucket classifier: learns a separable feature→bucket map,
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * training), and round-trips through save/load bit-identically.
   */
 class MlpEstimatorSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   // separable synthetic workload: feature slot 0 is a huge-scale raw
   // count (1e6-ish, exercises standardization), slot 1 is noise; the

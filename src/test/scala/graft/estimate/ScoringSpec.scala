@@ -1,6 +1,5 @@
 package graft.estimate
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model._
@@ -11,13 +10,7 @@ import graft.model._
   * whole point of the broadcast-checkpoint design.
   */
 class ScoringSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   private def col(name: String, t: DType) = ColumnModel(name, t,
     Some(ColumnStats(1000, 0, 100, index = false,
@@ -185,49 +178,6 @@ class ScoringSpec extends AnyFunSuite {
     }
     intercept[IllegalArgumentException] {
       Scoring.scoreWorkloadV20(spark, workload, "sql", tlJson, statsJson)
-    }
-  }
-
-  test("maxPredictorFor: max over families, classifier at its bucket center") {
-    val Dim = 203
-    def flat(sql: String): Array[Array[Double]] =
-      graft.encode.SetEncoders.flatMatrix(db, sql).map(_.padTo(Dim, 0.0))
-    def tree(sql: String): Gru4.Tree = {
-      val (parents, vecs) = graft.encode.SetEncoders.treeWithParents(db, sql)
-      Gru4.fromParents(parents, vecs.map(_.padTo(Dim, 0.0)))
-    }
-    val dir = java.nio.file.Files.createTempDirectory("scoringMax").toString
-    ModelIo.saveGru4(s"$dir/gru4.json",
-      Gru4.fit(sqls.map(tree).zip(Seq(0.0, 2.0, 1.0, 0.5)),
-        Gru4.Config(inputDim = Dim, hidden = 8, headHidden = 8,
-          lr = 5e-3, epochs = 3, batch = 2, seed = 42L)), norm = None)
-    ModelIo.saveGru(s"$dir/gru.json",
-      Gru.fit(sqls.map(s => (flat(s), 0)).zip(labels).map {
-        case ((seq, _), label) => (seq, label) },
-        Gru.Config(inputDim = Dim, hidden = 8, classes = 3,
-          lr = 5e-3, epochs = 3, batch = 2, seed = 42L)), norm = None)
-    def read(f: String) = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/$f"))
-    val statsJson = ModelJson.toJson(db)
-    val (gru4Json, gruJson) = (read("gru4.json"), read("gru.json"))
-
-    val v20 = Scoring.predictorFor(gru4Json, statsJson)
-    val cls = Scoring.predictorFor(gruJson, statsJson)
-    val maxP = Scoring.maxPredictorFor(Seq(gru4Json, gruJson), statsJson)
-    sqls.foreach { s =>
-      // the classifier is trained on ROUNDED log2 buckets (runtimeBucket
-      // = floor(log2+0.5)), so bucket b's log2-space center is b itself:
-      // the vote enters the max unshifted
-      assert(maxP(s) == math.max(v20(s), cls(s)),
-        s"max nomination mismatch for $s")
-    }
-    // either family alone may carry the nomination
-    assert(Scoring.maxPredictorFor(Seq(gru4Json), statsJson)(sqls.head)
-      == v20(sqls.head))
-    // a SQL no family can encode abstains everywhere -> NaN, not a throw
-    assert(maxP("SELECT MIN(nope.z) FROM nope").isNaN)
-    intercept[IllegalArgumentException] {
-      Scoring.maxPredictorFor(Nil, statsJson)
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft.lab
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke for the flagship lifecycle (balanced generation → REAL measured
@@ -9,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * recorded in README.md next to the reference's published band.
   */
 class CampaignSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("campaign measures, splits, trains and evaluates end-to-end") {
     val r = Campaign.run(spark, "/root/testdata/sf0.001", n = 10)
@@ -29,63 +20,6 @@ class CampaignSpec extends AnyFunSuite {
     assert(r.trainAcc >= 0.0 && r.trainAcc <= 1.0)
     assert(r.trainMae >= 0.0 && !r.trainMae.isNaN)
     assert(r.trainF1 >= 0.0 && r.trainF1 <= 1.0)
-  }
-
-  test("driftReport stamps served predictions and a drift column onto the workload") {
-    import graft.model._
-    import graft.estimate.{Gru, ModelIo}
-    def col(name: String, t: DType) = ColumnModel(name, t,
-      Some(ColumnStats(1000, 0, 100, index = false,
-        if (t == DType.Str) None else Some(NumericStats(1, 50, 100, 1, 0, 0)),
-        if (t == DType.Str) Some(StringStats(NumericStats(1, 5, 9, 1, 0, 0),
-          NumericStats(1, 2, 3, 0, 0, 0))) else None)))
-    val db = DbModel(Seq(
-      TableModel("ta", Seq(col("id", DType.Number), col("x", DType.Float))),
-      TableModel("tb", Seq(col("id", DType.Number), col("y", DType.Float))),
-      TableModel("tc", Seq(col("id", DType.Number), col("z", DType.Float)))))
-    val measured = Seq(
-      ("SELECT MIN(ta.x) FROM ta WHERE ta.id > 10", 2.0),
-      ("SELECT MIN(tb.y) FROM tb WHERE tb.id < 5", 0.5),
-      ("SELECT MIN(ta.x) FROM ta, tb WHERE ta.id = tb.id", 8.0))
-    val Dim = 203
-    def enc(sql: String): Array[Array[Double]] =
-      graft.encode.SetEncoders.flatMatrix(db, sql).map(_.padTo(Dim, 0.0))
-    val fitted = Gru.fit(measured.map { case (s, _) => (enc(s), 0) },
-      Gru.Config(inputDim = Dim, hidden = 4, classes = 2,
-        lr = 5e-3, epochs = 2, batch = 2, seed = 42L))
-    val dir = java.nio.file.Files.createTempDirectory("drift").toString
-    ModelIo.saveGru(s"$dir/gru.json", fitted, None)
-    val modelJson = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/gru.json"))
-
-    val drift = Campaign.driftReport(spark, measured, modelJson,
-      ModelJson.toJson(db))
-    assert(drift.columns.toSet ==
-      Set("sql", "runtime_sec", "log2_seconds", "est_seconds", "drift_log2"))
-    val rows = drift.collect().map(r => r.getAs[String]("sql") ->
-      (r.getAs[Double]("runtime_sec"), r.getAs[Double]("log2_seconds"),
-        r.getAs[Double]("drift_log2"))).toMap
-    assert(rows.size == measured.size, "every measured query keeps its row")
-    measured.foreach { case (sql, rt) =>
-      val (gotRt, predLog2, d) = rows(sql)
-      assert(gotRt == rt)
-      val expected = math.abs(predLog2 - math.log(math.max(rt, 1e-3)) / math.log(2))
-      assert(math.abs(d - expected) < 1e-9,
-        s"drift_log2 mismatch for $sql: $d vs $expected")
-    }
-
-    // duplicate SQL across generator streams (only CheckpointMerge
-    // dedups; a caller may pass a raw concatenation) must not fan the
-    // score-back join out to n² rows per copy — keep-first dedup
-    val withDup = measured ++ Seq(measured.head.copy(_2 = 99.0), measured(1))
-    val deduped = Campaign.driftReport(spark, withDup, modelJson,
-      ModelJson.toJson(db))
-    assert(deduped.count() == measured.size,
-      "duplicate SQLs must collapse to one row each")
-    val first = deduped.collect().map(r => r.getAs[String]("sql") ->
-      r.getAs[Double]("runtime_sec")).toMap
-    assert(first(measured.head._1) == measured.head._2,
-      "dedup must keep the FIRST measurement (CheckpointMerge convention)")
   }
 
   test("checkpoint save is atomic: rename over target, no temp left behind") {

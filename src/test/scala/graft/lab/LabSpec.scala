@@ -2,20 +2,13 @@ package graft.lab
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Tables
 
 class LabSpec extends AnyFunSuite {
   private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = graft.LocalSpark.session()
     Tables.registerAll(s, "/root/testdata/sf0.001")
     s
   }

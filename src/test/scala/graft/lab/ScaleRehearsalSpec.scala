@@ -1,6 +1,5 @@
 package graft.lab
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Dedup
@@ -10,13 +9,7 @@ import graft.ops.Dedup
   * numbers in SCALE.md measure noise.
   */
 class ScaleRehearsalSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("synthetic corpus is deterministic across generations") {
     val a = ScaleRehearsal.syntheticDocs(spark, 100).orderBy("doc_id").collect()

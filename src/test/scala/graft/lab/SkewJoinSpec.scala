@@ -1,6 +1,5 @@
 package graft.lab
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,20 +12,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * fire.
   */
 class SkewJoinSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // thresholds scaled down so a unit-test-sized hot key counts as skew
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.2")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "24KB")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // thresholds scaled down so a unit-test-sized hot key counts as skew
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "24KB",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   test("AQE splits a hot join key across tasks (skew=true in the final plan)") {
     import spark.implicits._

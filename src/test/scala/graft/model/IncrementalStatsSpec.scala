@@ -2,15 +2,9 @@ package graft.model
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 class IncrementalStatsSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.LocalSpark.session()
 
   private lazy val li = {
     spark.sparkContext.setLogLevel("ERROR")

@@ -12,12 +12,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 class StatsCollectorSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder().master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.LocalSpark.session()
 
   private val dir = "/root/testdata/sf0.001"
 

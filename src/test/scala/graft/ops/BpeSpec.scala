@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** BPE merge learning vs an independent driver-side reference
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * correctness anchor.
   */
 class BpeSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   /** Reference BPE: word-frequency dict, per round count adjacent pairs
     * weighted by frequency, merge the (count desc, pair asc) winner

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-6 corpus operators: C4-style chunk-level dedup with document
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pin the exact semantics the DuckDB oracles (q79/q80) recompute.
   */
 class ChunkLmSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("chunkDedup keeps first occurrence of a repeated chunk and reassembles") {
     import spark.implicits._

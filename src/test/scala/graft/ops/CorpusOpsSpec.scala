@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * DuckDB oracles recompute.
   */
 class CorpusOpsSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("connectedComponents labels every node with its component minimum") {
     import spark.implicits._

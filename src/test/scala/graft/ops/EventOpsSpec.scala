@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the ones the DuckDB oracles (q54/q55) recompute.
   */
 class EventOpsSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("sessionize splits strictly-greater-than-gap deltas; delta == gap stays") {
     import spark.implicits._

@@ -4,19 +4,10 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.DurationInt
 
 import org.apache.spark.JobExecutionStatus
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class FuturesSpec extends AnyFunSuite {
-  private lazy val sc = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s.sparkContext
-  }
+  private lazy val sc = graft.LocalSpark.root.sparkContext
 
   /** A Spark job whose one task sleeps until it is interrupted — a wedged job. */
   private def wedgedJob(): Int =

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lab.ScaleRehearsal
@@ -16,18 +15,11 @@ import graft.sources.BucketedStore
   */
 class IncrementalDedupSpec extends AnyFunSuite {
   private lazy val warehouse = java.nio.file.Files.createTempDirectory("incwh").toString
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", warehouse)
-      // force the shuffle-join path so the index-side no-shuffle claim is
-      // actually exercised (broadcast would hide it — and at corpus scale
-      // the index side could never broadcast anyway)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // force the shuffle-join path so the index-side no-shuffle claim is
+  // actually exercised (broadcast would hide it — and at corpus scale
+  // the index side could never broadcast anyway)
+  private lazy val spark =
+    graft.LocalSpark.session("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   private def buildIndex(table: String): Unit = {
     val corpus = ScaleRehearsal.syntheticDocs(spark, 300)

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,19 +13,10 @@ import graft.sources.BucketedStore
 class IvfIndexSpec extends AnyFunSuite {
   private lazy val warehouse =
     java.nio.file.Files.createTempDirectory("ivf_wh").toString
-  private lazy val spark = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", warehouse)
-      // force the shuffle-join path so the index-side no-shuffle claim is
-      // about the bucket layout, not a broadcast
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // force the shuffle-join path so the index-side no-shuffle claim is
+  // about the bucket layout, not a broadcast
+  private lazy val spark =
+    graft.LocalSpark.session("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   private def embeddings = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 

@@ -2,7 +2,6 @@ package graft.ops
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * is exactly the probed cells' members, never the whole corpus.
   */
 class IvfPqSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   private val m = 4
   private val subDim = 4

@@ -7,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * metadata consistency, deterministic content.
   */
 class MultimodalSpec extends AnyFunSuite {
-  private implicit lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private implicit lazy val spark: SparkSession = graft.LocalSpark.session()
 
   private def assets = {
     import spark.implicits._

@@ -1,18 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.rng.Seed
 
 class QuantilesSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   /** quantile_cont reference on a driver-side array. */
   private def ref(sorted: Array[Double], p: Double): Double = {

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bin-bucketed range join: results must equal the naive cartesian
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * DuckDB), and the plan must be an equi-join — never a nested loop.
   */
 class RangeJoinSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   private def naive(facts: org.apache.spark.sql.DataFrame,
                     ranges: org.apache.spark.sql.DataFrame) =

@@ -4,7 +4,6 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * nondeterminism) cannot hide in a shared implementation.
   */
 class SemanticDedupSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   // the engine's decimal-exact dot: each product HALF_UP at scale 12,
   // summed exactly (graft.plans.DecimalDotProduct) — replicated here so

@@ -1,17 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the parse/quarantine contract for JSON payload columns. */
 class SemiStructuredSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("valid payloads parse once; corrupt and null payloads quarantine") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft.ops
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * one exchange rather than executing the bucket subtree per side.
   */
 class SimilaritySpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("driver-side planeComponents == hash-derived Column formula") {
     import spark.implicits._

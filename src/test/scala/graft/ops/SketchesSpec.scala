@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import graft.plans.BloomSketch
   * and CMS point queries must respect the one-sided over-count bound.
   */
 class SketchesSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   private def docs() = {
     import spark.implicits._

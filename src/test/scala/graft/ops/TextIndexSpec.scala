@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-7 additions: inverted index, context windows, weighted
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracles recompute.
   */
 class TextIndexSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("invertedIndex emits df/cf and doc-ordered postings") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft.ops
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ever building the unpartitioned window it replaces.
   */
 class TopFractionSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   private def naive(df: org.apache.spark.sql.DataFrame, frac: Double) = {
     val n = df.count()

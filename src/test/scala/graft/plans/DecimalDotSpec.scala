@@ -2,7 +2,6 @@ package graft.plans
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fold it replaced — the DuckDB oracle reproduces the composed form.
   */
 class DecimalDotSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("native DecimalDotProduct == composed aggregate(zip_with(cast)) fold") {
     import spark.implicits._

@@ -1,23 +1,18 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{ExtendedSession, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
+object ExtensionsSpec {
+  /** A session built with [[GraftExtensions]] over the test root; it
+    * never becomes the active or default session, so the injected rule
+    * and functions stay out of every other suite. */
+  lazy val session: SparkSession =
+    ExtendedSession(graft.LocalSpark.root, new GraftExtensions)
+}
+
 class ExtensionsSpec extends AnyFunSuite {
-  private lazy val spark = {
-    // other suites may have created the default session already — clear so
-    // getOrCreate builds a NEW session (sharing the context) that actually
-    // carries the extensions
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = ExtensionsSpec.session
 
   /** range-backed frame: local Seq relations constant-fold away before
     * the optimizer output can be inspected. */

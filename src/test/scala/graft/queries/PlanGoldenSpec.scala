@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Tables
@@ -21,23 +20,10 @@ class PlanGoldenSpec extends AnyFunSuite {
 
   private val gate = "/root/testdata/sf0.01"
 
-  // newSession(): suites share one JVM-wide SparkSession whose runtime
-  // conf and temp views other suites mutate concurrently (several set
-  // autoBroadcastJoinThreshold=-1 at getOrCreate, which Spark applies
-  // to the EXISTING session; most register sf0.001 views). A plan-shape
-  // assertion needs both pinned, so this spec takes a child session
-  // with its own SQLConf and its own temp-view catalog.
   private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-      .newSession()
-    s.sparkContext.setLogLevel("ERROR")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
     // the production default the q61 golden was pinned under
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", (10L * 1024 * 1024).toString)
+    val s = graft.LocalSpark.session(
+      "spark.sql.autoBroadcastJoinThreshold" -> (10L * 1024 * 1024).toString)
     Tables.registerAll(s, gate)
     s
   }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,20 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BucketedStoreSpec extends AnyFunSuite {
   private lazy val warehouse = java.nio.file.Files.createTempDirectory("bswh").toString
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", warehouse)
-      // force the shuffle-join path: a broadcast join would hide the
-      // exchange this suite is about
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // events.parquet carries TIMESTAMP(NANOS): read ts as epoch-nanos long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // force the shuffle-join path: a broadcast join would hide the
+  // exchange this suite is about
+  private lazy val spark =
+    graft.LocalSpark.session("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rows must read NULL in the new column, and the proof obligation must
   * catch a dropped column. */
 class EvolvingStoreSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("merged read unions shard schemas; old rows are NULL in the new column") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * capture instead of job death, and the corrupt-count gate.
   */
 class JsonlStoreSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   private val docSchema = new StructType()
     .add("doc_id", LongType).add("text", StringType).add("lang", StringType)

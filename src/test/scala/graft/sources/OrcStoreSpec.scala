@@ -2,18 +2,11 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class OrcStoreSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   test("sorted ORC round-trip preserves rows and values") {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * point of the layout — where a one-dimensional sort scatters it.
   */
 class ZOrderStoreSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   /** Driver-side reference Morton interleave. */
   private def zRef(a: Long, b: Long, bits: Int): Long =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,17 +16,7 @@ import graft.sources.JsonlStore
   * committed shards nor double-appends a replayed batch.
   */
 class IngestDedupSpec extends AnyFunSuite {
-  private lazy val warehouse = Files.createTempDirectory("ingest_wh").toString
-  private lazy val spark = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   private val schema = new StructType()
     .add("doc_id", LongType).add("text", StringType)

@@ -1,20 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.schemaInference", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark =
+    graft.LocalSpark.session("spark.sql.streaming.schemaInference" -> "true")
 
   test("watermarked tumbling-window aggregation over the events stream") {
     val stream = EventStream.readEvents(spark, "/root/testdata/sf0.001")

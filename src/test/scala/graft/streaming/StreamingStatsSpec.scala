@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,15 +13,7 @@ import graft.model.IncrementalStats
   * all data, with crash-replayed batches collapsing to no-ops.
   */
 class StreamingStatsSpec extends AnyFunSuite {
-  private lazy val spark = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = graft.LocalSpark.session()
 
   private val schema = new StructType()
     .add("doc_id", LongType).add("score", DoubleType)
