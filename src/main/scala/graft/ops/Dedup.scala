@@ -122,20 +122,6 @@ object Dedup {
     withBands.selectExpr(idCol, s"stack($bands, $stacked) AS (band, bucket)")
   }
 
-  /** LSH band keys from flat (id, seed, min_hash) rows: re-pivots to the
-    * wide form first. Prefer piping [[minhashSignaturesWide]] straight
-    * into [[lshBandsWide]] — this entry point pays one extra shuffle and
-    * exists for callers who only hold the flat surface.
-    */
-  def lshBands(signatures: DataFrame, idCol: String,
-               bands: Int, rowsPerBand: Int): DataFrame = {
-    val k = bands * rowsPerBand
-    val wide = signatures.groupBy(col(idCol))
-      .pivot("seed", 0 until k).agg(first("min_hash"))
-      .select(col(idCol) +: (0 until k).map(s => col(s.toString).as(s"s$s")): _*)
-    lshBandsWide(wide, idCol, bands, rowsPerBand)
-  }
-
   /** Candidate pairs from LSH buckets (a < b, distinct). The self-join is
     * hash-partitioned on (band, bucket); bucket sizes are bounded by the
     * band width choice, keeping fan-out quadratic only within buckets.

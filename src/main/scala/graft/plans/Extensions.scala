@@ -168,10 +168,15 @@ object BloomSketch {
     * build path for every bloom operator (join, anti-join,
     * contamination). Duplicate keys are idempotent inserts, so the old
     * DISTINCT pass existed only to SIZE the filter — sizing by the exact
-    * row count instead (an upper bound on the distinct count, so the
-    * realized fpp is at or below the ask and bit count grows at most
-    * proportionally, still capped by maxNumBits) deletes that whole
-    * exchange + its temp persist from every bloom query. Two passes over
+    * row count instead (an upper bound on the distinct count; bit count
+    * grows at most proportionally) deletes that whole exchange + its
+    * temp persist from every bloom query. Below the maxNumItems /
+    * maxNumBits caps the realized fpp is at or below the ask. Under heavy
+    * duplication (stop-shingles repeated across documents) the inflated
+    * row count can reach those caps, and the hash-function count chosen
+    * for it can then push the realized fpp above the ask. That costs
+    * prefilter selectivity only: every caller finishes with the exact
+    * join, so results stay exact. Two passes over
     * `keys` remain (the sizing count, then the aggregate): hand this a
     * cheap-to-rescan frame — the join callers persist their small side
     * (shared with the exact join that follows), contamination feeds it

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.Tables
 import graft.encode.Encoder
@@ -8,6 +8,8 @@ import graft.estimate.Estimator
 import graft.gen.RandomQueryGen
 import graft.lab.Executor
 import graft.model.StatsCollector
+
+import QueryDef.frame
 
 /** Rows-only query entries (no SQL-expressible oracle) exposing the
   * reference-pipeline components end-to-end: workload generation (G2),
@@ -89,9 +91,9 @@ object PipelineCatalog {
     ok
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val all: Seq[QueryDef] = Seq(
     // G2: seeded random workload over the collected stats model
-    "q60_generate" -> { (s, dir) =>
+    frame("q60_generate") { (s, dir) =>
       import s.implicits._
       val db = model(s, dir)
       val rows = (1 to 20).map { seed =>
@@ -105,7 +107,7 @@ object PipelineCatalog {
     },
 
     // X1/X4: timing protocol + physical-plan op-tree capture
-    "q61_plan_ops" -> { (s, dir) =>
+    frame("q61_plan_ops") { (s, dir) =>
       import s.implicits._
       Tables.registerAll(s, dir)
       val ex = new Executor(s, timeoutSec = 300)
@@ -130,7 +132,7 @@ object PipelineCatalog {
     },
 
     // E1-E11: deterministic per-node feature vectors for a fixed query
-    "q62_encode" -> { (s, dir) =>
+    frame("q62_encode") { (s, dir) =>
       import s.implicits._
       val db = model(s, dir)
       val tree = Encoder.encodeQuery(db,
@@ -149,7 +151,7 @@ object PipelineCatalog {
 
     // E-families 2+3: MSCN set encoding and greq compact per-node
     // vectors over a generated workload (shapes + checksums per query)
-    "q64_set_encoders" -> { (s, dir) =>
+    frame("q64_set_encoders") { (s, dir) =>
       import s.implicits._
       import graft.encode.SetEncoders
       val db = model(s, dir)
@@ -194,7 +196,7 @@ object PipelineCatalog {
     // in ANY encoder family fails the query even though the trained
     // metrics themselves are not pinned (GBT internals are not part of
     // the encoding contract).
-    "q63_estimate" -> { (s, dir) =>
+    frame("q63_estimate") { (s, dir) =>
       import s.implicits._
       val db = model(s, dir)
       val workload = (1 to 60).flatMap { seed =>
@@ -287,7 +289,7 @@ object PipelineCatalog {
     // (customer ⋈ orders) first (FROM order), so the merged tree is
     // provably restructured — `restructured` asserts it, and the golden
     // CRC pins the merged shape AND its stats-derived vectors.
-    "q74_plan_merged_encode" -> { (s, dir) =>
+    frame("q74_plan_merged_encode") { (s, dir) =>
       import s.implicits._
       val sql =
         """SELECT MIN(c.c_acctbal) FROM customer as c, lineitem as l, orders as o

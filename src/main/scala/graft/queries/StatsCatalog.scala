@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.model.StatsCollector
+
+import QueryDef.frame
 
 /** Oracle-checked exposure of the stats collector (SURVEY §2.1 S4/S5):
   * the engine collects the full [[graft.model.DbModel]] and emits the
@@ -36,24 +36,8 @@ object StatsCatalog {
 
   private val tables = measureCols.map(_._1).distinct
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q50_stats_model" -> { (s, dir) =>
-      import s.implicits._
-      val db = StatsCollector.collect(s, dir, tables)
-      val wanted = measureCols.map { case (t, c, _) => (t, c) }.toSet
-      val rows = for {
-        t <- db.tables
-        c <- t.columns if wanted.contains((t.name, c.name))
-        st <- c.stats; num <- st.numeric
-      } yield (t.name, c.name, st.total, st.nulls, st.distinct, num.min, num.max)
-      rows.toDF("table_name", "column_name", "total", "nulls", "n_distinct",
-          "min_val", "max_val")
-        .orderBy("table_name", "column_name")
-    }
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q50_stats_model" -> {
+  val all: Seq[QueryDef] = Seq(
+    frame("q50_stats_model", {
       val parts = measureCols.map { case (t, c, kind) =>
         val m = if (kind == "time") s"CAST(floor(epoch($c)) AS BIGINT)" else c
         s"""SELECT '$t' AS table_name, '$c' AS column_name,
@@ -65,6 +49,18 @@ object StatsCatalog {
            |FROM $t""".stripMargin
       }
       s"SELECT * FROM (\n${parts.mkString("\nUNION ALL\n")}\n) ORDER BY table_name, column_name"
+    }) { (s, dir) =>
+      import s.implicits._
+      val db = StatsCollector.collect(s, dir, tables)
+      val wanted = measureCols.map { case (t, c, _) => (t, c) }.toSet
+      val rows = for {
+        t <- db.tables
+        c <- t.columns if wanted.contains((t.name, c.name))
+        st <- c.stats; num <- st.numeric
+      } yield (t.name, c.name, st.total, st.nulls, st.distinct, num.min, num.max)
+      rows.toDF("table_name", "column_name", "total", "nulls", "n_distinct",
+          "min_val", "max_val")
+        .orderBy("table_name", "column_name")
     }
   )
 }

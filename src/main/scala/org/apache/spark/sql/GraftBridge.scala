@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
@@ -13,9 +16,12 @@ object GraftBridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Estimated scan-split count of a frame whose leaves are ALL file
-    * relations — None otherwise (the caller falls back to an exact RDD
-    * probe). Pure metadata arithmetic over the already-cached file index
+  /** Estimated scan-split count of a frame that is ONE file relation
+    * under nothing but projections and filters — None otherwise, and the
+    * caller falls back to an exact RDD probe. Any other node above the
+    * scan (coalesce, repartition, aggregate, window, join, union) sets
+    * its own partition count, so the scan's splits say nothing about the
+    * frame's. Pure metadata arithmetic over the already-cached file index
     * using FilePartition.maxSplitBytes' own formula: no analysis, no
     * physical planning, no RDD construction — the cheap replacement for
     * `df.rdd.getNumPartitions` in Spread's "fewer splits than cores?"
@@ -27,26 +33,24 @@ object GraftBridge {
     */
   def estimatedScanSplits(df0: DataFrame): Option[Long] = {
     val df = df0.asInstanceOf[classic.Dataset[Row]]
-    val leaves = df.queryExecution.logical.collectLeaves()
-    val rels = leaves.map {
+    @tailrec def fileScan(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+      case Project(_, child) => fileScan(child)
+      case Filter(_, child) => fileScan(child)
       case l: LogicalRelation => l.relation match {
         case r: HadoopFsRelation => Some(r)
         case _ => None
       }
       case _ => None
     }
-    if (rels.isEmpty || rels.exists(_.isEmpty)) None
-    else {
+    fileScan(df.queryExecution.logical).map { r =>
       val conf = df.sparkSession.sessionState.conf
       val par = math.max(1L, df.sparkSession.sparkContext.defaultParallelism.toLong)
       val openCost = conf.filesOpenCostInBytes
-      Some(rels.flatten.map { r =>
-        val total = r.location.sizeInBytes +
-          r.location.inputFiles.length.toLong * openCost
-        val maxSplit = math.min(conf.filesMaxPartitionBytes,
-          math.max(openCost, total / par))
-        if (maxSplit <= 0L) 1L else math.max(1L, (total + maxSplit - 1) / maxSplit)
-      }.sum)
+      val total = r.location.sizeInBytes +
+        r.location.inputFiles.length.toLong * openCost
+      val maxSplit = math.min(conf.filesMaxPartitionBytes,
+        math.max(openCost, total / par))
+      if (maxSplit <= 0L) 1L else math.max(1L, (total + maxSplit - 1) / maxSplit)
     }
   }
 }

@@ -28,7 +28,7 @@ class PlanGoldenSpec extends AnyFunSuite {
     s
   }
 
-  // the exact q61 SQL (PipelineCatalog.queries("q61_plan_ops"))
+  // the exact q61 SQL (PipelineCatalog's q61_plan_ops entry)
   private val sql =
     """SELECT o.o_orderkey, COUNT(*) AS n FROM lineitem l, orders o
       |WHERE l.l_orderkey = o.o_orderkey AND o.o_totalprice > 1000.0
