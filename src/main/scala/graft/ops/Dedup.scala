@@ -1,7 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftBridge, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import PortableHash.hash60
 
@@ -11,7 +17,8 @@ import PortableHash.hash60
   * with the operators a training-data pipeline needs.
   *
   * Scale design (100 TB): every op is one explode + one hash-partitioned
-  * aggregation/join — no driver-side loops, no collect. Candidate
+  * aggregation/join — no unbounded collect (connectedComponents collects
+  * only a contracted graph under the broadcast threshold). Candidate
   * generation (LSH bands, SimHash pigeonhole chunks) bounds the join
   * fan-out so the all-pairs quadratic blow-up never materializes; the
   * exact similarity is only computed on candidate pairs. Common-shingle
@@ -305,35 +312,63 @@ object Dedup {
     * `cluster_id` = the smallest node id reachable through the pairs —
     * the canonical "keep one doc per duplicate cluster" step downstream
     * of any candidate-pair generator ([[lshCandidates]],
-    * [[ngramJaccardPairs]], [[simhashPairs]], embedding near-dup).
-    *
-    * Algorithm: iterative min-label propagation. Each round joins the
-    * current labels across the (symmetrized) edges and keeps the
-    * per-node minimum; labels only ever decrease, so the total strictly
-    * falls until the fixpoint, which the loop detects with a single
-    * scalar aggregate per round. Rounds = graph diameter (not n). The
+    * [[ngramJaccardPairs]], [[simhashPairs]], embedding near-dup). The
     * result is the exact component minimum — deterministic regardless of
-    * partitioning or join order.
+    * partitioning, join order or which finish below runs.
     *
-    * Scale design: each round is one shuffle keyed on the node id for
-    * the propagate-join + min-groupBy, plus one keyed on the label for
-    * a pointer-jump shortcut (`label(n) := min(label(n),
-    * label(label(n)))`), which makes the round count O(log diameter)
-    * instead of O(diameter) — on a 64-node chain, 6 rounds instead of
-    * 63 (asserted in CorpusOpsSpec). Near-dup graphs have tiny
-    * diameters anyway (duplicate clusters are dense); the shortcut is
-    * insurance for adversarial chains. Checkpointing truncates the
-    * otherwise exponentially growing lineage each round:
-    * `localCheckpoint` (fast, executor-local blocks) by default, or a
-    * reliable `checkpoint` with `reliable = true` for real clusters
-    * where executor loss would kill local blocks mid-iteration — the
-    * caller must have set `SparkContext.setCheckpointDir` to a
-    * fault-tolerant location first.
+    * One pipeline, partial work before the exchange (the partial
+    * aggregation of "New Query Optimization Techniques in the Spark
+    * Engine of Azure Synapse", VLDB 2021) and a size-based finish:
+    *
+    *  1. Contract. Edges touching a node outside `nodes` are semi-joined
+    *     away, the rest are symmetrized and hash-partitioned on one
+    *     endpoint, so each partition holds every edge of its nodes. One
+    *     `mapPartitions` pass of union-find per partition emits a star
+    *     forest, node → partition-local minimum: the same components as
+    *     the edges, never more rows. That forest is checkpointed once, so
+    *     the caller's (typically expensive, unpersisted) pair pipeline
+    *     runs exactly once on either finish.
+    *  2. Driver finish, when the forest fits the session's
+    *     `spark.sql.autoBroadcastJoinThreshold` at two ids of the id
+    *     type's `defaultSize` per row — the rule a broadcast join decides
+    *     by. One job materializes the forest, counts it and ships it to
+    *     the driver, never more rows than that bound admits; union-find on
+    *     the driver labels it, the labels come back as a local relation
+    *     and nothing stays persisted. [[lastRounds]] reads 0.
+    *  3. Distributed finish, when the forest is over the bound or the
+    *     threshold is −1 (never broadcast): iterative min-label propagation
+    *     over the contracted graph. Each round joins the current labels
+    *     across the symmetrized forest, keeps the per-node minimum and
+    *     pointer-jumps (`label(n) := min(label(n), label(label(n)))`), so
+    *     the round count is O(log diameter) — on a 64-node chain at most
+    *     10 (asserted in CorpusOpsSpec); a single scalar probe per round
+    *     detects the fixpoint. Every round is checkpointed to truncate the
+    *     otherwise exponentially growing lineage — `localCheckpoint` by
+    *     default, or a reliable `checkpoint` with `reliable = true` for
+    *     real clusters where executor loss would kill local blocks
+    *     mid-iteration (the caller must have set
+    *     `SparkContext.setCheckpointDir` to a fault-tolerant location
+    *     first) — and released once the next round is materialized, so
+    *     only the blocks behind the returned frame stay. [[lastRounds]]
+    *     reads the round count. The rounds plan on a clone of the
+    *     caller's session with constraint propagation off: every
+    *     checkpoint captures its origin plan's constraint set, and on
+    *     join-dense CC plans that closure blows up combinatorially (r16
+    *     thread-dumped minutes of driver planning per round). Constraints
+    *     gate only optional rewrites, never results, and the caller's own
+    *     conf is never written.
+    *
+    * Both finishes label only edge-incident nodes; isolated nodes come
+    * back self-labeled via one left join of the node set + coalesce —
+    * not a Union with an identity-seeded branch, whose node=cluster_id
+    * alias-equality constraint crashes Catalyst's Union constraint
+    * rewriting under constraint propagation (the r15 crash).
     *
     * Labels carry the node id in its NATIVE type (min works for any
-    * orderable id — long, string, decimal): the previous `cast("long")`
-    * turned string doc-ids into all-NULL labels and converged instantly
-    * to garbage.
+    * orderable id — long, string, decimal): a `cast("long")` would turn
+    * string doc-ids into all-NULL labels. Id types whose values the
+    * union-find cannot compare as Spark does (binary, floating point,
+    * non-binary collations) skip the contraction and the driver finish.
     */
   def connectedComponents(edges: DataFrame, idA: String, idB: String,
                           nodes: DataFrame, idCol: String,
@@ -341,98 +376,197 @@ object Dedup {
     val spark = nodes.sparkSession
     if (reliable) require(spark.sparkContext.getCheckpointDir.isDefined,
       "reliable=true needs SparkContext.setCheckpointDir (a fault-tolerant path)")
-    def cp(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    // Catalyst guard for the whole driver-orchestrated loop: every
-    // checkpoint captures the origin plan's CONSTRAINT SET into its
-    // LogicalRDD, and each later reference to that frame pays
-    // rewriteStatsAndConstraints over it. On join-dense CC plans the
-    // ExpressionSet closure blows up combinatorially — r16 thread-dumped
-    // minutes of single-threaded driver planning per round when one
-    // checkpointed frame was referenced 4× (the synchronous-jump round
-    // below). Constraints only gate optional rewrites (inferred filters),
-    // never results, and every frame in the loop is already filtered and
-    // null-free by construction — switch propagation off for the loop so
-    // every captured constraint set is empty, and restore after. The
-    // returned labels frame is a checkpointed LogicalRDD, so downstream
-    // consumers plan under the caller's own setting.
-    val ckey = "spark.sql.constraintPropagation.enabled"
-    val cprev = spark.conf.get(ckey)
-    spark.conf.set(ckey, "false")
-    try {
-      val nodeSet = cp(nodes.select(col(idCol).as("node")).distinct())
-      // contract: components over EXACTLY the given node set — an edge
-      // endpoint outside it (e.g. a pair computed before a filter dropped
-      // the doc) must not introduce phantom rows or labels, so foreign
-      // edges are semi-joined away up front. The symmetrized edges are
-      // hash-partitioned on dst BEFORE the checkpoint: the LogicalRDD
-      // keeps that partitioning, so the per-round propagate join
-      // co-partitions on dst without re-shuffling the (2|E|-row) edge
-      // frame every round — one setup exchange replaces one per round.
-      // both orientations come out of ONE generator pass over the edge
-      // frame — the old union-of-two-projections consumed the caller's
-      // (typically expensive, typically unpersisted) pair pipeline TWICE
-      val sym = cp(edges
-        .select(explode(array(
-          struct(col(idA).as("src"), col(idB).as("dst")),
-          struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .join(nodeSet.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(nodeSet.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .repartition(col("dst")))
-      // iterate ONLY over edge-incident nodes: an isolated node keeps
-      // label = self forever, so it has no business riding through every
-      // round's joins — near-dup graphs at corpus scale are sparse, and
-      // the iterated frame is O(edge endpoints), not O(corpus). Isolated
-      // nodes are unioned back (self-labeled) after the fixpoint.
-      var labels = cp(sym.select(col("src").as("node")).distinct()
-        .withColumn("cluster_id", col("node")))
-      // fixpoint = no label changed this round (a changed-row count, NOT
-      // a sum of labels: label sums overflow Long for 60-bit hash ids,
-      // and an empty edge set sums to NULL)
-      var converged = labels.isEmpty
-      var rounds = 0
-      while (!converged) {
-        // every incident node is a src of some sym edge (symmetrized),
-        // so prop is TOTAL over labels and the merge join is inner
-        val prop = sym.join(labels, sym("dst") === labels("node"))
-          .select(col("src").as("node"), col("cluster_id").as("prop_min"))
-          .groupBy("node").agg(min("prop_min").as("prop_min"))
-        val merged = labels.join(prop, Seq("node"))
-          .select(col("node"), col("cluster_id").as("prev"),
-            least(col("cluster_id"), col("prop_min")).as("mid"))
-        // SYNCHRONOUS pointer jump against the PREVIOUS round's labels:
-        // mid is always an incident-node id (min over such ids, by
-        // induction from the identity seeding), so label(mid) is one
-        // total inner join away and the whole round — propagate, merge,
-        // jump — materializes in ONE checkpoint instead of r16's two.
-        // The label chain still halves per round, hence O(log d) rounds.
-        val next = cp(merged.join(
-            labels.select(col("node").as("cl"), col("cluster_id").as("cl_lab")),
-            col("mid") === col("cl"))
-          .select(col("node"), col("prev"),
-            least(col("mid"), col("cl_lab")).as("cluster_id")))
-        rounds += 1
-        // next == prev everywhere ⟹ mid == prev (the jump can only
-        // lower further) ⟹ propagation fixpoint ⟹ labels constant
-        // across every edge ⟹ exact component minimum — same proof as
-        // the two-checkpoint round, one cheap scan of the checkpointed
-        // blocks to confirm
-        converged = next.where(col("cluster_id") =!= col("prev")).isEmpty
-        labels = next.select("node", "cluster_id")
-      }
-      lastRoundsTL.set(rounds)
-      // isolated nodes come back self-labeled via ONE left join +
-      // coalesce — not a Union with an identity-seeded branch, whose
-      // node=cluster_id alias-equality constraint crashes Catalyst's
-      // Union constraint rewriting when the caller consumes this frame
-      // with constraint propagation back on (NoSuchElementException in
-      // rewriteConstraints — the r15 crash this code already dodged once)
-      nodeSet.join(labels, Seq("node"), "left")
-        .select(col("node").as(idCol),
-          coalesce(col("cluster_id"), col("node")).as("cluster_id"))
-    } finally { spark.conf.set(ckey, cprev) }
+    val nodeSet = nodes.select(col(idCol).as("node")).distinct()
+    // components over EXACTLY the given node set: an edge endpoint
+    // outside it (e.g. a pair computed before a filter dropped the doc)
+    // must not introduce phantom rows or labels. A semi-join ignores
+    // duplicate keys, so it reads the ids without the node set's distinct.
+    val ids = nodes.select(col(idCol))
+    val inSet = edges.select(col(idA).as("src"), col(idB).as("dst"))
+      .join(ids.select(col(idCol).as("src")), Seq("src"), "left_semi")
+      .join(ids.select(col(idCol).as("dst")), Seq("dst"), "left_semi")
+      .select("src", "dst")
+    val idType = inSet.schema("src").dataType
+    val order = idOrder(idType)
+    val forest = checkpoint(order.fold(inSet) { key =>
+      symmetrized(inSet).repartition(col("dst"))
+        .mapPartitions(contract(_, key))(Encoders.row(inSet.schema))
+    }, reliable, eager = false)
+    val bound = GraftBridge.broadcastThreshold(spark)
+    val labels = order.filter(_ => bound >= 0)
+      .flatMap(driverFinish(forest, _, bound / (2L * idType.defaultSize)))
+      .getOrElse(minLabelRounds(forest, reliable))
+    nodeSet.join(labels, Seq("node"), "left")
+      .select(col("node").as(idCol),
+        coalesce(col("cluster_id"), col("node")).as("cluster_id"))
   }
+
+  /** The driver finish of [[connectedComponents]]: union-find on the
+    * driver over `forest` (checkpointed, not yet materialized) when it has
+    * at most `limit` rows, with the labels as a local relation and the
+    * forest released; None, and the forest materialized, when it is
+    * larger. ONE job materializes the checkpoint, counts every partition
+    * and ships a partition's rows only when they are within its share of
+    * `limit`, so the driver never receives more than `limit` rows; only a
+    * forest skewed past one partition's share needs a second job.
+    */
+  private def driverFinish(forest: DataFrame, key: Any => Comparable[Any],
+                           limit: Long): Option[DataFrame] = {
+    val rows = forest.rdd
+    val share = limit / math.max(1, rows.getNumPartitions)
+    val parts = forest.sparkSession.sparkContext.runJob(rows, (it: Iterator[Row]) => {
+      val kept = mutable.ArrayBuffer.empty[Row]
+      var n = 0L
+      it.foreach { r => n += 1; if (n <= share) kept += r }
+      (n, if (n <= share) kept.toArray else Array.empty[Row])
+    })
+    if (parts.map(_._1).sum > limit) None else {
+      val uf = new UnionFind(key)
+      val edges = if (parts.forall(_._1 <= share)) parts.flatMap(_._2) else forest.collect()
+      edges.foreach(r => uf.union(r.get(0), r.get(1)))
+      release(forest)
+      lastRoundsTL.set(0)
+      val idType = forest.schema("src").dataType
+      Some(forest.sparkSession.createDataFrame(
+        uf.labels.map { case (n, l) => Row(n, l) }.toList.asJava,
+        StructType(Seq(StructField("node", idType), StructField("cluster_id", idType)))))
+    }
+  }
+
+  /** The distributed finish of [[connectedComponents]] over `forest`
+    * (checkpointed (src, dst) edges, released here), on a clone of its
+    * session with constraint propagation off; the labels come back on
+    * the caller's session.
+    */
+  private def minLabelRounds(forest: DataFrame, reliable: Boolean): DataFrame = {
+    val caller = forest.sparkSession
+    val clone = GraftBridge.cloneSession(caller,
+      "spark.sql.constraintPropagation.enabled" -> "false")
+    // hash-partitioned on dst BEFORE the checkpoint: the LogicalRDD keeps
+    // that partitioning, so the per-round propagate join co-partitions on
+    // dst without re-shuffling the edges every round
+    val sym = checkpoint(symmetrized(GraftBridge.rehome(forest, clone))
+      .repartition(col("dst")), reliable)
+    release(forest)
+    // every iterated node is a src of some sym edge (symmetrized), so
+    // prop is TOTAL over labels and the merge join is inner
+    var labels = checkpoint(sym.select(col("src").as("node")).distinct()
+      .withColumn("cluster_id", col("node")), reliable)
+    // fixpoint = no label changed this round (a changed-row count, NOT a
+    // sum of labels: label sums overflow Long for 60-bit hash ids, and an
+    // empty edge set sums to NULL)
+    var converged = labels.isEmpty
+    var rounds = 0
+    while (!converged) {
+      val prop = sym.join(labels, sym("dst") === labels("node"))
+        .select(col("src").as("node"), col("cluster_id").as("prop_min"))
+        .groupBy("node").agg(min("prop_min").as("prop_min"))
+      val merged = labels.join(prop, Seq("node"))
+        .select(col("node"), col("cluster_id").as("prev"),
+          least(col("cluster_id"), col("prop_min")).as("mid"))
+      // SYNCHRONOUS pointer jump against the PREVIOUS round's labels: mid
+      // is always an iterated-node id (min over such ids, by induction
+      // from the identity seeding), so label(mid) is one total inner join
+      // away and the whole round — propagate, merge, jump — materializes
+      // in ONE checkpoint. The label chain still halves per round.
+      val next = checkpoint(merged.join(
+          labels.select(col("node").as("cl"), col("cluster_id").as("cl_lab")),
+          col("mid") === col("cl"))
+        .select(col("node"), col("prev"),
+          least(col("mid"), col("cl_lab")).as("cluster_id")), reliable)
+      rounds += 1
+      // next == prev everywhere ⟹ mid == prev (the jump can only lower
+      // further) ⟹ propagation fixpoint ⟹ labels constant across every
+      // edge ⟹ exact component minimum; one cheap scan of the
+      // checkpointed blocks confirms it
+      converged = next.where(col("cluster_id") =!= col("prev")).isEmpty
+      release(labels)
+      labels = next.select("node", "cluster_id")
+    }
+    release(sym)
+    lastRoundsTL.set(rounds)
+    GraftBridge.rehome(labels, caller)
+  }
+
+  /** Both orientations of every (src, dst) edge, out of ONE generator
+    * pass: a union of two projections would consume the input twice.
+    */
+  private def symmetrized(e: DataFrame): DataFrame =
+    e.select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+
+  /** One partition's edges contracted to a star forest: (node, least node
+    * of its partition-local component) for every node that is not that
+    * least node — the same components, at most one row per edge.
+    */
+  private def contract(edges: Iterator[Row], key: Any => Comparable[Any]): Iterator[Row] = {
+    val uf = new UnionFind(key)
+    edges.foreach(r => uf.union(r.get(0), r.get(1)))
+    uf.labels.collect { case (n, l) if n != l => Row(n, l) }
+  }
+
+  /** Keys that order node ids as Spark does, or None when the boxed
+    * values cannot: strings compare by their UTF-8 bytes (Java's `String`
+    * order is UTF-16 units), the other supported types by their natural
+    * order, which for these types is Spark's. Binary ids have no value
+    * equality on the JVM, floating-point ids need Spark's NaN and −0.0
+    * normalization, and collated strings compare by their collation.
+    */
+  private def idOrder(dt: DataType): Option[Any => Comparable[Any]] = dt match {
+    case StringType =>
+      Some(v => UTF8String.fromString(v.asInstanceOf[String]).asInstanceOf[Comparable[Any]])
+    case ByteType | ShortType | IntegerType | LongType | _: DecimalType | DateType | TimestampType | TimestampNTZType =>
+      Some(_.asInstanceOf[Comparable[Any]])
+    case _ => None
+  }
+
+  /** Union-find over node ids compared by value, each set remembering
+    * its least id under `key` (union by size, path halving).
+    */
+  private final class UnionFind(key: Any => Comparable[Any]) {
+    private val index = mutable.HashMap.empty[Any, Int]
+    private val ids = mutable.ArrayBuffer.empty[Any]
+    private val parent = mutable.ArrayBuffer.empty[Int]
+    private val size = mutable.ArrayBuffer.empty[Int]
+    private val least = mutable.ArrayBuffer.empty[Any]
+
+    private def find(v: Any): Int = {
+      var i = index.getOrElseUpdate(v, {
+        ids += v; parent += ids.size - 1; size += 1; least += v; ids.size - 1
+      })
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+
+    def union(a: Any, b: Any): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        val (big, small) = if (size(ra) >= size(rb)) (ra, rb) else (rb, ra)
+        parent(small) = big
+        size(big) += size(small)
+        if (key(least(small)).compareTo(key(least(big))) < 0) least(big) = least(small)
+      }
+    }
+
+    /** Every id seen, with the least id of its set. */
+    def labels: Iterator[(Any, Any)] = ids.iterator.map(v => v -> least(find(v)))
+  }
+
+  /** `df` checkpointed: local blocks, or the checkpoint dir when
+    * `reliable`. Not eager, the blocks are written by the first job
+    * that reads the frame.
+    */
+  private def checkpoint(df: DataFrame, reliable: Boolean, eager: Boolean = true): DataFrame =
+    if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
+
+  /** Drops the blocks of a checkpointed frame. */
+  private def release(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Canonical-corpus selection: keep ONE representative per duplicate
     * cluster — the document with the highest `scoreCol`, ties to the
@@ -458,10 +592,11 @@ object Dedup {
     df.join(winners, Seq(clusterCol, idCol), "left_semi")
   }
 
-  /** Rounds the most recent [[connectedComponents]] call ON THIS THREAD
-    * took — a test-introspection hook (the O(log diameter) assertion in
-    * CorpusOpsSpec). ThreadLocal, not a shared var: concurrent CC runs
-    * in one JVM must not report each other's round counts.
+  /** Distributed min-label rounds the most recent [[connectedComponents]]
+    * call ON THIS THREAD ran: 0 when the driver finished it — a
+    * test-introspection hook (the O(log diameter) assertion in
+    * CorpusOpsSpec). ThreadLocal, not a shared var: concurrent CC runs in
+    * one JVM must not report each other's round counts.
     */
   private[graft] val lastRoundsTL: ThreadLocal[Int] =
     ThreadLocal.withInitial(() => 0)

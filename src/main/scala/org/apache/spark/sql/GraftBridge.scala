@@ -16,6 +16,31 @@ object GraftBridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A clone of `spark` with `conf` set on the clone alone: it shares
+    * the SparkContext, the catalog and the cache, and starts from a copy
+    * of the caller's runtime conf, so a driver-orchestrated operator can
+    * plan under its own settings while concurrent queries on `spark` keep
+    * theirs.
+    */
+  def cloneSession(spark: SparkSession, conf: (String, String)*): SparkSession = {
+    val c = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    conf.foreach { case (k, v) => c.conf.set(k, v) }
+    c
+  }
+
+  /** `df`'s plan as a frame of `spark` (a clone's result handed back to
+    * the caller's session, or the caller's input handed to a clone).
+    */
+  def rehome(df: DataFrame, spark: SparkSession): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes; −1
+    * means never broadcast.
+    */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
+
   /** Estimated scan-split count of a frame that is ONE file relation
     * under nothing but projections and filters — None otherwise, and the
     * caller falls back to an exact RDD probe. Any other node above the
@@ -29,7 +54,10 @@ object GraftBridge {
     * called this out as per-query driver overhead). An estimate is
     * enough there: a borderline miss either adds one harmless
     * repartition of an already-parallel source or skips a spread the
-    * exact probe would also have skipped at equality.
+    * exact probe would also have skipped at equality. Reads the analyzed
+    * plan, which every frame has already computed: the parsed plan of a
+    * bare `spark.read.parquet` is an unresolved data-source node, not a
+    * `LogicalRelation`.
     */
   def estimatedScanSplits(df0: DataFrame): Option[Long] = {
     val df = df0.asInstanceOf[classic.Dataset[Row]]
@@ -42,7 +70,7 @@ object GraftBridge {
       }
       case _ => None
     }
-    fileScan(df.queryExecution.logical).map { r =>
+    fileScan(df.queryExecution.analyzed).map { r =>
       val conf = df.sparkSession.sessionState.conf
       val par = math.max(1L, df.sparkSession.sparkContext.defaultParallelism.toLong)
       val openCost = conf.filesOpenCostInBytes

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,17 +13,201 @@ import org.scalatest.funsuite.AnyFunSuite
 class CorpusOpsSpec extends AnyFunSuite {
   private lazy val spark = graft.LocalSpark.session()
 
-  test("connectedComponents labels every node with its component minimum") {
-    import spark.implicits._
-    // components: {1,2,3,4} (chain), {5,6} (pair), {7} (singleton), {8,9,10} (triangle)
-    val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (5L, 6L),
-      (8L, 9L), (9L, 10L), (10L, 8L)).toDF("id_a", "id_b")
-    val nodes = (1L to 10L).toDF("id")
-    val got = Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 8L, 9L -> 8L, 10L -> 8L)
-    assert(got == want)
+  /** The connected-components cases run on two sessions: the suite's
+    * own, where every graph here fits the broadcast threshold and the
+    * driver finishes, and a child that never broadcasts, where the
+    * distributed min-label rounds finish. The driver case keeps the
+    * test's plain name.
+    */
+  private lazy val noBroadcast =
+    graft.LocalSpark.session("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+  private val finishes: Seq[(String, () => SparkSession)] =
+    Seq("" -> (() => spark), " (distributed finish)" -> (() => noBroadcast))
+
+  /** Labels of `connectedComponents` as a map, after checking which
+    * finish ran: the driver runs no round, the distributed finish at
+    * least one whenever an edge survives.
+    */
+  private def components[T](s: SparkSession, edges: DataFrame, nodes: DataFrame,
+                            reliable: Boolean = false): Map[T, T] = {
+    val got = Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id", reliable)
+    val rounds = Dedup.lastRounds
+    if (s eq spark) assert(rounds == 0, s"driver finish expected, ran $rounds rounds")
+    else assert(rounds > 0 || got.where(col("id") =!= col("cluster_id")).isEmpty,
+      "distributed finish expected, ran no round")
+    got.collect().map(r => r.getAs[T](0) -> r.getAs[T](1)).toMap
+  }
+
+  /** Plain union-find with path compression: each node's component
+    * minimum.
+    */
+  private def referenceComponents(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = Array.tabulate(n + 1)(identity)
+    def find(x: Int): Int = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a.toInt), find(b.toInt))
+      // union larger -> smaller, so every root is its component minimum
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    (1 to n).map(i => i.toLong -> find(i).toLong).toMap
+  }
+
+  finishes.foreach { case (finish, session) =>
+    test(s"connectedComponents labels every node with its component minimum$finish") {
+      val s = session(); import s.implicits._
+      // components: {1,2,3,4} (chain), {5,6} (pair), {7} (singleton), {8,9,10} (triangle)
+      val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (5L, 6L),
+        (8L, 9L), (9L, 10L), (10L, 8L)).toDF("id_a", "id_b")
+      val got = components[Long](s, edges, (1L to 10L).toDF("id"))
+      val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 8L, 9L -> 8L, 10L -> 8L)
+      assert(got == want)
+    }
+
+    test(s"connectedComponents is partition-independent and handles a long chain$finish") {
+      val s = session(); import s.implicits._
+      // a 40-node path graph: worst-case diameter for the propagation loop
+      val edges = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val got = components[Long](s, edges.repartition(7), (1L to 40L).toDF("id").repartition(3))
+      assert(got == (1L to 40L).map(_ -> 1L).toMap)
+    }
+
+    test(s"connectedComponents agrees with a reference union-find on a seeded random graph$finish") {
+      val s = session(); import s.implicits._
+      val rnd = new scala.util.Random(20260812L)
+      val n = 120
+      val edges = Seq.fill(90)((rnd.nextInt(n).toLong + 1, rnd.nextInt(n).toLong + 1))
+        .filter(e => e._1 != e._2)
+      val got = components[Long](s, edges.toDF("id_a", "id_b"), (1L to n.toLong).toDF("id"))
+      assert(got == referenceComponents(n, edges))
+    }
+
+    test(s"connectedComponents ignores edges touching nodes outside the given set$finish") {
+      val s = session(); import s.implicits._
+      // edge (5,9): 9 is not in the node set — must neither appear in the
+      // output nor pull 5's label anywhere
+      val edges = Seq((1L, 2L), (5L, 9L)).toDF("id_a", "id_b")
+      val got = components[Long](s, edges, (1L to 5L).toDF("id"))
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 5L))
+    }
+
+    test(s"connectedComponents pointer jump converges in O(log diameter) rounds$finish") {
+      val s = session(); import s.implicits._
+      // 64-node path: diameter 63. Plain min-propagation needs ~63 rounds;
+      // with the label(label(n)) jump the chain halves every round, so the
+      // count must land well under the diameter (2^8 > 63 → ≤ 8 + slack)
+      val edges = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val got = components[Long](s, edges, (1L to 64L).toDF("id"))
+      assert(got == (1L to 64L).map(_ -> 1L).toMap)
+      assert(Dedup.lastRounds <= 10,
+        s"64-chain took ${Dedup.lastRounds} rounds — pointer jump not effective")
+    }
+
+    test(s"connectedComponents keeps string ids native (no silent long cast)$finish") {
+      val s = session(); import s.implicits._
+      // a cast("long") would turn these ids into all-NULL labels and
+      // converge instantly to garbage
+      val edges = Seq(("doc-b", "doc-a"), ("doc-c", "doc-b")).toDF("id_a", "id_b")
+      val got = components[String](s, edges, Seq("doc-a", "doc-b", "doc-c", "doc-z").toDF("id"))
+      assert(got == Map("doc-a" -> "doc-a", "doc-b" -> "doc-a",
+        "doc-c" -> "doc-a", "doc-z" -> "doc-z"))
+    }
+
+    test(s"connectedComponents keeps decimal ids native beyond the long range$finish") {
+      val s = session(); import s.implicits._
+      val big = BigDecimal("9223372036854775808") // Long.MaxValue + 1
+      val id = (i: Int) => (big + i).bigDecimal
+      val edges = Seq((id(3), id(1)), (id(2), id(3)), (id(5), id(6))).toDF("id_a", "id_b")
+        .select(col("id_a").cast("decimal(20,0)").as("id_a"), col("id_b").cast("decimal(20,0)").as("id_b"))
+      val nodes = (1 to 7).map(id).toDF("id").select(col("id").cast("decimal(20,0)").as("id"))
+      val got = components[java.math.BigDecimal](s, edges, nodes)
+      assert(got.map { case (k, v) => (BigDecimal(k) - big).toInt -> (BigDecimal(v) - big).toInt } ==
+        Map(1 -> 1, 2 -> 1, 3 -> 1, 4 -> 4, 5 -> 5, 6 -> 5, 7 -> 7))
+    }
+
+    test(s"connectedComponents reliable=true checkpoints through the configured dir$finish") {
+      val s = session(); import s.implicits._
+      val edges = Seq((2L, 1L), (3L, 2L)).toDF("id_a", "id_b")
+      val nodes = (1L to 4L).toDF("id")
+      // without a checkpoint dir the reliable path must fail fast
+      if (s.sparkContext.getCheckpointDir.isEmpty) intercept[IllegalArgumentException] {
+        Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id", reliable = true)
+      }
+      val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+      s.sparkContext.setCheckpointDir(dir)
+      val got = components[Long](s, edges, nodes, reliable = true)
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
+      // proof the reliable path actually wrote checkpoint files
+      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      assert(wrote > 0, s"reliable=true left no files under $dir")
+    }
+
+    test(s"connectedComponents on an empty node set returns empty$finish") {
+      val s = session(); import s.implicits._
+      val edges = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+      val nodes = Seq.empty[Long].toDF("id")
+      assert(components[Long](s, edges, nodes).isEmpty)
+    }
+
+    test(s"connectedComponents equals a reference union-find on 20 seeded graphs at 1, 3 and 7 partitions$finish") {
+      val s = session(); import s.implicits._
+      (1 to 20).foreach { seed =>
+        val rnd = new scala.util.Random(seed)
+        val n = 10 + rnd.nextInt(60)
+        val edges = Seq.fill(rnd.nextInt(2 * n))((rnd.nextInt(n).toLong + 1, rnd.nextInt(n).toLong + 1))
+        val want = referenceComponents(n, edges)
+        val parts = Seq(1, 3, 7)(seed % 3)
+        val got = components[Long](s, edges.toDF("id_a", "id_b").repartition(parts),
+          (1L to n.toLong).toDF("id").repartition(parts))
+        assert(got == want, s"seed $seed, $parts partitions")
+      }
+    }
+  }
+
+  test("connectedComponents: concurrent driver and distributed finishes leave the session's conf alone") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.DurationInt
+    // 4 KiB admits 256 long-pair forest rows: the chain finishes on the
+    // driver, the random graph (~300 forest rows) on the distributed rounds
+    val s = graft.LocalSpark.session("spark.sql.autoBroadcastJoinThreshold" -> "4096")
+    import s.implicits._
+    val chain = () => Dedup.connectedComponents(
+      (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b"), "id_a", "id_b",
+      (1L to 40L).toDF("id"), "id")
+    val rnd = new scala.util.Random(7L)
+    val randomEdges = Seq.fill(600)((rnd.nextInt(400).toLong + 1, rnd.nextInt(400).toLong + 1))
+    val random = () => Dedup.connectedComponents(randomEdges.toDF("id_a", "id_b"),
+      "id_a", "id_b", (1L to 400L).toDF("id"), "id")
+    val unrelated = () => s.range(0, 20000).groupBy((col("id") % 7).as("k")).count()
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    def run(build: () => DataFrame) = { val df = build(); (rows(df), Dedup.lastRounds) }
+    val conf = s.conf.getAll
+    val sequential = Seq(chain, random, unrelated).map(run)
+    assert(sequential(0)._2 == 0 && sequential(1)._2 > 0,
+      s"expected one driver and one distributed finish, ran ${sequential.map(_._2)} rounds")
+    val concurrent = Await.result(
+      Future.sequence(Seq(chain, random, unrelated).map(b => Future(run(b)))), 120.seconds)
+    // the pool thread of the unrelated query may hold an earlier CC's count
+    assert(concurrent.map(_._1) == sequential.map(_._1))
+    assert(concurrent.take(2).map(_._2) == sequential.take(2).map(_._2))
+    assert(s.conf.getAll == conf)
+  }
+
+  test("connectedComponents: the distributed finish keeps only the blocks behind its result") {
+    val s = noBroadcast
+    import s.implicits._
+    val sc = s.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val got = Dedup.connectedComponents(
+      (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b"), "id_a", "id_b",
+      (1L to 70L).toDF("id"), "id")
+    assert(Dedup.lastRounds > 0)
+    val backing = got.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    assert(backing.nonEmpty)
+    assert(sc.getPersistentRDDs.keySet -- before == backing)
+    assert(got.where(col("cluster_id") === 1L).count() == 64L)
   }
 
   test("keepBest keeps the top-scored doc per cluster, ties to the smallest id") {
@@ -44,98 +230,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("numeric id"))
   }
 
-  test("connectedComponents is partition-independent and handles a long chain") {
-    import spark.implicits._
-    // a 40-node path graph: worst-case diameter for the propagation loop
-    val edges = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val nodes = (1L to 40L).toDF("id")
-    val got = Dedup.connectedComponents(edges.repartition(7), "id_a", "id_b",
-        nodes.repartition(3), "id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (1L to 40L).map(_ -> 1L).toMap)
-  }
-
-  test("connectedComponents agrees with a reference union-find on a seeded random graph") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(20260812L)
-    val n = 120
-    val edges = Seq.fill(90)((rnd.nextInt(n).toLong + 1, rnd.nextInt(n).toLong + 1))
-      .filter(e => e._1 != e._2)
-    val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"),
-        "id_a", "id_b", (1L to n.toLong).toDF("id"), "id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // reference: plain union-find with path compression
-    val parent = Array.tabulate(n + 1)(identity)
-    def find(x: Int): Int = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a.toInt), find(b.toInt))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val want = (1 to n).map { i =>
-      // component minimum: after unions, walk to the root (roots are
-      // always the component minimum because we union larger -> smaller)
-      i.toLong -> find(i).toLong
-    }.toMap
-    assert(got == want)
-  }
-
-  test("connectedComponents ignores edges touching nodes outside the given set") {
-    import spark.implicits._
-    // edge (5,9): 9 is not in the node set — must neither appear in the
-    // output nor pull 5's label anywhere
-    val edges = Seq((1L, 2L), (5L, 9L)).toDF("id_a", "id_b")
-    val nodes = (1L to 5L).toDF("id")
-    val got = Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 5L))
-  }
-
-  test("connectedComponents pointer jump converges in O(log diameter) rounds") {
-    import spark.implicits._
-    // 64-node path: diameter 63. Plain min-propagation needs ~63 rounds;
-    // with the label(label(n)) jump the chain halves every round, so the
-    // count must land well under the diameter (2^8 > 63 → ≤ 8 + slack).
-    val edges = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val nodes = (1L to 64L).toDF("id")
-    val got = Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (1L to 64L).map(_ -> 1L).toMap)
-    assert(Dedup.lastRounds <= 10,
-      s"64-chain took ${Dedup.lastRounds} rounds — pointer jump not effective")
-  }
-
-  test("connectedComponents keeps string ids native (no silent long cast)") {
-    import spark.implicits._
-    // pre-fix behavior: cast("long") turned these ids into all-NULL
-    // labels and converged instantly to garbage
-    val edges = Seq(("doc-b", "doc-a"), ("doc-c", "doc-b")).toDF("id_a", "id_b")
-    val nodes = Seq("doc-a", "doc-b", "doc-c", "doc-z").toDF("id")
-    val got = Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got == Map("doc-a" -> "doc-a", "doc-b" -> "doc-a",
-      "doc-c" -> "doc-a", "doc-z" -> "doc-z"))
-  }
-
-  test("connectedComponents reliable=true checkpoints through the configured dir") {
-    import spark.implicits._
-    val edges = Seq((2L, 1L), (3L, 2L)).toDF("id_a", "id_b")
-    val nodes = (1L to 4L).toDF("id")
-    // without a checkpoint dir the reliable path must fail fast
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id", reliable = true)
-    }
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val got = Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id",
-        reliable = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
-    // proof the reliable path actually wrote checkpoint files
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-    assert(wrote > 0, s"reliable=true left no files under $dir")
-  }
-
   test("simhashPairs rejects radius configs whose pigeonhole cannot prune") {
     import spark.implicits._
     val sim = Seq((1L, 7L), (2L, 7L)).toDF("doc_id", "simhash")
@@ -153,13 +247,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     val got = Dedup.simhashPairs(sim, "doc_id", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set((1L, 2L, 0L)))
-  }
-
-  test("connectedComponents on an empty node set returns empty") {
-    import spark.implicits._
-    val edges = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    val nodes = Seq.empty[Long].toDF("id")
-    assert(Dedup.connectedComponents(edges, "id_a", "id_b", nodes, "id").count() == 0L)
   }
 
   test("ngramContamination counts distinct train-overlapping shingles per eval doc") {

@@ -47,4 +47,14 @@ class SpreadSpec extends AnyFunSuite {
     assert(est.exists(_ < par), s"single-file scan estimated at $est splits")
     assert(Spread(shaped).rdd.getNumPartitions == par)
   }
+
+  test("a bare parquet read takes the metadata path") {
+    // Tables.load is a bare spark.read.parquet: its parsed plan is an
+    // unresolved data-source node, its analyzed plan the file relation
+    val par = spark.sparkContext.defaultParallelism
+    val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    val est = GraftBridge.estimatedScanSplits(docs)
+    assert(est.exists(_ < par), s"bare single-file read estimated at $est splits")
+    assert(Spread(docs).rdd.getNumPartitions == par)
+  }
 }
