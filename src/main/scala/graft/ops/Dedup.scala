@@ -3,7 +3,7 @@ package graft.ops
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftBridge, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,7 +18,7 @@ import PortableHash.hash60
   *
   * Scale design (100 TB): every op is one explode + one hash-partitioned
   * aggregation/join — no unbounded collect (connectedComponents collects
-  * only a contracted graph under the broadcast threshold). Candidate
+  * only an edge set under the broadcast threshold). Candidate
   * generation (LSH bands, SimHash pigeonhole chunks) bounds the join
   * fan-out so the all-pairs quadratic blow-up never materializes; the
   * exact similarity is only computed on candidate pairs. Common-shingle
@@ -316,32 +316,29 @@ object Dedup {
     * result is the exact component minimum — deterministic regardless of
     * partitioning, join order or which finish below runs.
     *
-    * One pipeline, partial work before the exchange (the partial
-    * aggregation of "New Query Optimization Techniques in the Spark
-    * Engine of Azure Synapse", VLDB 2021) and a size-based finish:
+    * One pipeline with a size-based finish, decided the way a broadcast
+    * join is:
     *
-    *  1. Contract. Edges touching a node outside `nodes` are semi-joined
-    *     away, the rest are symmetrized and hash-partitioned on one
-    *     endpoint, so each partition holds every edge of its nodes. One
-    *     `mapPartitions` pass of union-find per partition emits a star
-    *     forest, node → partition-local minimum: the same components as
-    *     the edges, never more rows. That forest is checkpointed once, so
-    *     the caller's (typically expensive, unpersisted) pair pipeline
-    *     runs exactly once on either finish.
-    *  2. Driver finish, when the forest fits the session's
+    *  1. Edges touching a node outside `nodes` are semi-joined away and
+    *     both endpoints take one id type. When a driver finish is
+    *     possible, that edge set is checkpointed once, so the caller's
+    *     (typically expensive, unpersisted) pair pipeline runs exactly
+    *     once whichever finish follows.
+    *  2. Driver finish, when the edge set fits the session's
     *     `spark.sql.autoBroadcastJoinThreshold` at two ids of the id
-    *     type's `defaultSize` per row — the rule a broadcast join decides
-    *     by. One job materializes the forest, counts it and ships it to
-    *     the driver, never more rows than that bound admits; union-find on
-    *     the driver labels it, the labels come back as a local relation
-    *     and nothing stays persisted. [[lastRounds]] reads 0.
-    *  3. Distributed finish, when the forest is over the bound or the
-    *     threshold is −1 (never broadcast): iterative min-label propagation
-    *     over the contracted graph. Each round joins the current labels
-    *     across the symmetrized forest, keeps the per-node minimum and
-    *     pointer-jumps (`label(n) := min(label(n), label(label(n)))`), so
-    *     the round count is O(log diameter) — on a 64-node chain at most
-    *     10 (asserted in CorpusOpsSpec); a single scalar probe per round
+    *     type's `defaultSize` per row. One job (after the checkpoint
+    *     write when `reliable`) materializes the edges, counts them and
+    *     ships them to the driver, never more rows than that bound
+    *     admits; union-find on the driver labels them, the labels come
+    *     back as a local relation and nothing stays persisted.
+    *     [[lastRounds]] reads 0.
+    *  3. Distributed finish, when the edge set is over the bound or the
+    *     threshold is −1 (never broadcast): iterative min-label
+    *     propagation. Each round joins the current labels across the
+    *     symmetrized edges, keeps the per-node minimum and pointer-jumps
+    *     (`label(n) := min(label(n), label(label(n)))`), so the round
+    *     count is O(log diameter) — on a 64-node chain at most 10
+    *     (asserted in CorpusOpsSpec); a single scalar probe per round
     *     detects the fixpoint. Every round is checkpointed to truncate the
     *     otherwise exponentially growing lineage — `localCheckpoint` by
     *     default, or a reliable `checkpoint` with `reliable = true` for
@@ -351,7 +348,8 @@ object Dedup {
     *     first) — and released once the next round is materialized, so
     *     only the blocks behind the returned frame stay. [[lastRounds]]
     *     reads the round count. The rounds plan on a clone of the
-    *     caller's session with constraint propagation off: every
+    *     caller's session ([[roundsSession]]) with constraint
+    *     propagation off: every
     *     checkpoint captures its origin plan's constraint set, and on
     *     join-dense CC plans that closure blows up combinatorially (r16
     *     thread-dumped minutes of driver planning per round). Constraints
@@ -368,7 +366,12 @@ object Dedup {
     * orderable id — long, string, decimal): a `cast("long")` would turn
     * string doc-ids into all-NULL labels. Id types whose values the
     * union-find cannot compare as Spark does (binary, floating point,
-    * non-binary collations) skip the contraction and the driver finish.
+    * non-binary collations) always take the distributed finish.
+    *
+    * A per-partition union-find pass before the collect (contracting the
+    * edges to a star forest) was measured and left out: on the pair
+    * graphs of q49/q70/q90 and q100 it removed 0–9% of the rows (e.g.
+    * 590 edges → 538 forest rows at sf0.1) for one more shuffle.
     */
   def connectedComponents(edges: DataFrame, idA: String, idB: String,
                           nodes: DataFrame, idCol: String,
@@ -382,39 +385,46 @@ object Dedup {
     // must not introduce phantom rows or labels. A semi-join ignores
     // duplicate keys, so it reads the ids without the node set's distinct.
     val ids = nodes.select(col(idCol))
-    val inSet = edges.select(col(idA).as("src"), col(idB).as("dst"))
+    val joined = edges.select(col(idA).as("src"), col(idB).as("dst"))
       .join(ids.select(col(idCol).as("src")), Seq("src"), "left_semi")
       .join(ids.select(col(idCol).as("dst")), Seq("dst"), "left_semi")
-      .select("src", "dst")
-    val idType = inSet.schema("src").dataType
-    val order = idOrder(idType)
-    val forest = checkpoint(order.fold(inSet) { key =>
-      symmetrized(inSet).repartition(col("dst"))
-        .mapPartitions(contract(_, key))(Encoders.row(inSet.schema))
-    }, reliable, eager = false)
+    // one id type for both endpoints (e.g. int and bigint widen to
+    // bigint), the type the symmetrized rounds would widen them to
+    val idType = symmetrized(joined).schema("src").dataType
+    val typed = joined.select(col("src").cast(idType).as("src"), col("dst").cast(idType).as("dst"))
     val bound = GraftBridge.broadcastThreshold(spark)
-    val labels = order.filter(_ => bound >= 0)
-      .flatMap(driverFinish(forest, _, bound / (2L * idType.defaultSize)))
-      .getOrElse(minLabelRounds(forest, reliable))
+    val labels = idOrder(idType).filter(_ => bound >= 0) match {
+      case None => minLabelRounds(typed, reliable)
+      case Some(key) =>
+        // checkpointed once, so the pair pipeline runs once whichever
+        // finish follows. A lazy reliable checkpoint would compute its
+        // input twice (for the first job, then to write the files), so a
+        // reliable one is eager.
+        val edgeSet = checkpoint(typed, reliable, eager = reliable)
+        val out = driverFinish(edgeSet, key, bound / (2L * idType.defaultSize))
+          .getOrElse(minLabelRounds(edgeSet, reliable))
+        release(edgeSet)
+        out
+    }
     nodeSet.join(labels, Seq("node"), "left")
       .select(col("node").as(idCol),
         coalesce(col("cluster_id"), col("node")).as("cluster_id"))
   }
 
   /** The driver finish of [[connectedComponents]]: union-find on the
-    * driver over `forest` (checkpointed, not yet materialized) when it has
-    * at most `limit` rows, with the labels as a local relation and the
-    * forest released; None, and the forest materialized, when it is
-    * larger. ONE job materializes the checkpoint, counts every partition
-    * and ships a partition's rows only when they are within its share of
-    * `limit`, so the driver never receives more than `limit` rows; only a
-    * forest skewed past one partition's share needs a second job.
+    * driver over `edges` (checkpointed (src, dst) pairs) when there are
+    * at most `limit` of them, with the labels as a local relation; None,
+    * and the edges materialized, when there are more. ONE job
+    * materializes the checkpoint, counts every partition and ships a
+    * partition's rows only when they are within its share of `limit`, so
+    * the driver never receives more than `limit` rows; only an edge set
+    * skewed past one partition's share needs a second job.
     */
-  private def driverFinish(forest: DataFrame, key: Any => Comparable[Any],
+  private def driverFinish(edges: DataFrame, key: Any => Comparable[Any],
                            limit: Long): Option[DataFrame] = {
-    val rows = forest.rdd
+    val rows = edges.rdd
     val share = limit / math.max(1, rows.getNumPartitions)
-    val parts = forest.sparkSession.sparkContext.runJob(rows, (it: Iterator[Row]) => {
+    val parts = edges.sparkSession.sparkContext.runJob(rows, (it: Iterator[Row]) => {
       val kept = mutable.ArrayBuffer.empty[Row]
       var n = 0L
       it.foreach { r => n += 1; if (n <= share) kept += r }
@@ -422,32 +432,29 @@ object Dedup {
     })
     if (parts.map(_._1).sum > limit) None else {
       val uf = new UnionFind(key)
-      val edges = if (parts.forall(_._1 <= share)) parts.flatMap(_._2) else forest.collect()
-      edges.foreach(r => uf.union(r.get(0), r.get(1)))
-      release(forest)
+      val pairs = if (parts.forall(_._1 <= share)) parts.flatMap(_._2) else edges.collect()
+      pairs.foreach(r => uf.union(r.get(0), r.get(1)))
       lastRoundsTL.set(0)
-      val idType = forest.schema("src").dataType
-      Some(forest.sparkSession.createDataFrame(
+      val idType = edges.schema("src").dataType
+      Some(edges.sparkSession.createDataFrame(
         uf.labels.map { case (n, l) => Row(n, l) }.toList.asJava,
         StructType(Seq(StructField("node", idType), StructField("cluster_id", idType)))))
     }
   }
 
-  /** The distributed finish of [[connectedComponents]] over `forest`
-    * (checkpointed (src, dst) edges, released here), on a clone of its
-    * session with constraint propagation off; the labels come back on
-    * the caller's session.
+  /** The distributed finish of [[connectedComponents]] over `edges`
+    * ((src, dst) pairs, read once), on a clone of their session with
+    * constraint propagation off; the labels come back on the caller's
+    * session.
     */
-  private def minLabelRounds(forest: DataFrame, reliable: Boolean): DataFrame = {
-    val caller = forest.sparkSession
-    val clone = GraftBridge.cloneSession(caller,
-      "spark.sql.constraintPropagation.enabled" -> "false")
+  private def minLabelRounds(edges: DataFrame, reliable: Boolean): DataFrame = {
+    val caller = edges.sparkSession
+    val clone = roundsSession(caller)
     // hash-partitioned on dst BEFORE the checkpoint: the LogicalRDD keeps
     // that partitioning, so the per-round propagate join co-partitions on
     // dst without re-shuffling the edges every round
-    val sym = checkpoint(symmetrized(GraftBridge.rehome(forest, clone))
+    val sym = checkpoint(symmetrized(GraftBridge.rehome(edges, clone))
       .repartition(col("dst")), reliable)
-    release(forest)
     // every iterated node is a src of some sym edge (symmetrized), so
     // prop is TOTAL over labels and the merge join is inner
     var labels = checkpoint(sym.select(col("src").as("node")).distinct()
@@ -488,6 +495,26 @@ object Dedup {
     GraftBridge.rehome(labels, caller)
   }
 
+  /** The session the distributed rounds plan on: a clone of `caller`
+    * with constraint propagation off, reused while the caller and its
+    * runtime conf are unchanged. A fresh clone's first queries pay for
+    * its own analyzer and planner state, about 1 s per CC call on the
+    * 6k–20k-node chains of `ScaleRehearsal`. Only the latest clone is
+    * kept.
+    */
+  private[graft] def roundsSession(caller: SparkSession): SparkSession = synchronized {
+    val conf = caller.conf.getAll
+    roundsClone match {
+      case Some((c, k, clone)) if (c eq caller) && k == conf => clone
+      case _ =>
+        val clone = GraftBridge.cloneSession(caller,
+          "spark.sql.constraintPropagation.enabled" -> "false")
+        roundsClone = Some((caller, conf, clone))
+        clone
+    }
+  }
+  private var roundsClone: Option[(SparkSession, Map[String, String], SparkSession)] = None
+
   /** Both orientations of every (src, dst) edge, out of ONE generator
     * pass: a union of two projections would consume the input twice.
     */
@@ -496,16 +523,6 @@ object Dedup {
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-
-  /** One partition's edges contracted to a star forest: (node, least node
-    * of its partition-local component) for every node that is not that
-    * least node — the same components, at most one row per edge.
-    */
-  private def contract(edges: Iterator[Row], key: Any => Comparable[Any]): Iterator[Row] = {
-    val uf = new UnionFind(key)
-    edges.foreach(r => uf.union(r.get(0), r.get(1)))
-    uf.labels.collect { case (n, l) if n != l => Row(n, l) }
-  }
 
   /** Keys that order node ids as Spark does, or None when the boxed
     * values cannot: strings compare by their UTF-8 bytes (Java's `String`
@@ -555,8 +572,8 @@ object Dedup {
   }
 
   /** `df` checkpointed: local blocks, or the checkpoint dir when
-    * `reliable`. Not eager, the blocks are written by the first job
-    * that reads the frame.
+    * `reliable`. A lazy checkpoint is written by the first job that
+    * reads the frame.
     */
   private def checkpoint(df: DataFrame, reliable: Boolean, eager: Boolean = true): DataFrame =
     if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)

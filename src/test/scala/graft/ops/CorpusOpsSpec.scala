@@ -125,6 +125,28 @@ class CorpusOpsSpec extends AnyFunSuite {
         Map(1 -> 1, 2 -> 1, 3 -> 1, 4 -> 4, 5 -> 5, 6 -> 5, 7 -> 7))
     }
 
+    test(s"connectedComponents widens mixed endpoint id types$finish") {
+      val s = session(); import s.implicits._
+      val edges = Seq((2L, 1), (3L, 2), (5L, 6)).toDF("id_a", "id_b")
+      val got = components[Long](s, edges, (1L to 7L).toDF("id"))
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L, 7L -> 7L))
+    }
+
+    test(s"connectedComponents computes its input pairs once, local or reliable$finish") {
+      val s = session(); import s.implicits._
+      if (s.sparkContext.getCheckpointDir.isEmpty)
+        s.sparkContext.setCheckpointDir(java.nio.file.Files.createTempDirectory("cc-ckpt").toString)
+      val pairs = (1L until 40L).map(i => (i, i + 1))
+      Seq(false, true).foreach { reliable =>
+        val reads = s.sparkContext.longAccumulator
+        val edges = s.sparkContext.parallelize(pairs, 3).map { p => reads.add(1); p }.toDF("id_a", "id_b")
+        val got = components[Long](s, edges, (1L to 40L).toDF("id"), reliable)
+        assert(got == (1L to 40L).map(_ -> 1L).toMap)
+        assert(reads.value == pairs.size,
+          s"reliable=$reliable: ${reads.value} pair rows computed for ${pairs.size} pairs")
+      }
+    }
+
     test(s"connectedComponents reliable=true checkpoints through the configured dir$finish") {
       val s = session(); import s.implicits._
       val edges = Seq((2L, 1L), (3L, 2L)).toDF("id_a", "id_b")
@@ -169,8 +191,8 @@ class CorpusOpsSpec extends AnyFunSuite {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.DurationInt
-    // 4 KiB admits 256 long-pair forest rows: the chain finishes on the
-    // driver, the random graph (~300 forest rows) on the distributed rounds
+    // 4 KiB admits 256 long-pair edge rows: the 39-edge chain finishes on
+    // the driver, the 600-edge random graph on the distributed rounds
     val s = graft.LocalSpark.session("spark.sql.autoBroadcastJoinThreshold" -> "4096")
     import s.implicits._
     val chain = () => Dedup.connectedComponents(
@@ -193,6 +215,19 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(concurrent.map(_._1) == sequential.map(_._1))
     assert(concurrent.take(2).map(_._2) == sequential.take(2).map(_._2))
     assert(s.conf.getAll == conf)
+  }
+
+  test("connectedComponents: the rounds plan on one clone that follows the caller's conf") {
+    val s = graft.LocalSpark.session()
+    val key = "spark.sql.constraintPropagation.enabled"
+    val callerSetting = s.conf.get(key)
+    val first = Dedup.roundsSession(s)
+    assert(Dedup.roundsSession(s) eq first)
+    s.conf.set("spark.sql.shuffle.partitions", "3")
+    val next = Dedup.roundsSession(s)
+    assert(!(next eq first))
+    assert(next.conf.get("spark.sql.shuffle.partitions") == "3")
+    assert(next.conf.get(key) == "false" && s.conf.get(key) == callerSetting)
   }
 
   test("connectedComponents: the distributed finish keeps only the blocks behind its result") {

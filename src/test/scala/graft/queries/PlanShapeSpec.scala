@@ -146,8 +146,8 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   /** The highest job count of three fresh-JVM runs of each query once
-    * connected components contract the graph and finish on the driver
-    * (q49 12/12/12, q90 12/12/12, q100 29/29/29; the distributed rounds
+    * connected components finish on the driver
+    * (q49 11/11/11, q90 11/11/11, q100 28/28/28; the distributed rounds
     * drew 31, 31 and 71 to 75). A connected-components query over its
     * ceiling launched extra rounds or extra eager jobs. Adaptive
     * execution submits some query stages as jobs of their own, and how
@@ -156,9 +156,9 @@ class PlanShapeSpec extends AnyFunSuite {
     * eager job shows in both.
     */
   private val jobCeiling = Map(
-    "q49_dedup_clusters" -> 12,
-    "q90_groupaware_split" -> 12,
-    "q100_semantic_dedup" -> 29)
+    "q49_dedup_clusters" -> 11,
+    "q90_groupaware_split" -> 11,
+    "q100_semantic_dedup" -> 28)
 
   jobCeiling.toSeq.sortBy(_._1).foreach { case (name, ceiling) =>
     test(s"$name: at most $ceiling Spark jobs") {
