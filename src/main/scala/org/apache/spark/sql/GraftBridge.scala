@@ -1,11 +1,20 @@
 package org.apache.spark.sql
 
 import scala.annotation.tailrec
+import scala.util.Using
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, DoubleType}
 
 /** Column ↔ Expression bridge. Spark 4 made these conversions
   * private[sql]; extension libraries place a small accessor inside the
@@ -38,47 +47,138 @@ object GraftBridge {
   /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes; −1
     * means never broadcast.
     */
-  def broadcastThreshold(spark: SparkSession): Long =
-    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
+  def broadcastThreshold(spark: SparkSession): Long = sqlConf(spark).autoBroadcastJoinThreshold
 
-  /** Estimated scan-split count of a frame that is ONE file relation
-    * under nothing but projections and filters — None otherwise, and the
-    * caller falls back to an exact RDD probe. Any other node above the
-    * scan (coalesce, repartition, aggregate, window, join, union) sets
-    * its own partition count, so the scan's splits say nothing about the
-    * frame's. Pure metadata arithmetic over the already-cached file index
-    * using FilePartition.maxSplitBytes' own formula: no analysis, no
-    * physical planning, no RDD construction — the cheap replacement for
-    * `df.rdd.getNumPartitions` in Spread's "fewer splits than cores?"
-    * check, which re-planned the whole query once per call (r16 verdict
-    * called this out as per-query driver overhead). An estimate is
-    * enough there: a borderline miss either adds one harmless
-    * repartition of an already-parallel source or skips a spread the
-    * exact probe would also have skipped at equality. Reads the analyzed
-    * plan, which every frame has already computed: the parsed plan of a
-    * bare `spark.read.parquet` is an unresolved data-source node, not a
-    * `LogicalRelation`.
+  /** Spark's size estimate of `df` in bytes: its optimized plan's
+    * statistics, the figure a join compares with
+    * `spark.sql.autoBroadcastJoinThreshold`.
     */
-  def estimatedScanSplits(df0: DataFrame): Option[Long] = {
-    val df = df0.asInstanceOf[classic.Dataset[Row]]
-    @tailrec def fileScan(p: LogicalPlan): Option[HadoopFsRelation] = p match {
-      case Project(_, child) => fileScan(child)
-      case Filter(_, child) => fileScan(child)
+  def sizeEstimate(df: DataFrame): BigInt =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** `df`'s rows in Spark's internal format, before any conversion to
+    * external `Row`s.
+    */
+  def internalRows(df: DataFrame): RDD[InternalRow] =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
+
+  /** Spark's own cast of a double to `to`, evaluated on the driver under
+    * `spark`'s conf: null where Spark's cast is null (NaN or infinity to
+    * a decimal), and Spark's error where it fails (a decimal overflow
+    * under ANSI mode). One function per thread: it reuses its input row.
+    */
+  def doubleCast(spark: SparkSession, to: DataType): Double => Any = {
+    val conf = sqlConf(spark)
+    val cast = Cast(BoundReference(0, DoubleType, nullable = false), to,
+      Some(conf.sessionLocalTimeZone), EvalMode.fromSQLConf(conf))
+    val row = new GenericInternalRow(1)
+    d => { row.update(0, d); cast.eval(row) }
+  }
+
+  /** Spark's `avg` of decimal values of type `in` with exact sum `sum`
+    * over `count` non-null values: the sum divided as `Average` divides
+    * it, at avg's result type decimal(p + 4, s + 4) (bounded). None where
+    * Spark's avg is null.
+    */
+  def decimalAvg(spark: SparkSession, sum: java.math.BigDecimal, count: Long,
+                 in: DecimalType): Option[Decimal] = {
+    val out = DecimalType.bounded(in.precision + 4, in.scale + 4)
+    if (count == 0L) None
+    else Option((Decimal(sum) / Decimal(count)).toPrecision(out.precision, out.scale,
+      Decimal.ROUND_HALF_UP, !sqlConf(spark).ansiEnabled, null))
+  }
+
+  private def sqlConf(spark: SparkSession): SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  /** The file relation `df` reads when it is ONE such relation under
+    * nothing but projections and filters, from the analyzed plan (the
+    * parsed plan of a bare `spark.read.parquet` is an unresolved
+    * data-source node, not a `LogicalRelation`).
+    */
+  private def fileScan(df: DataFrame): Option[HadoopFsRelation] = {
+    @tailrec def scan(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+      case Project(_, child) => scan(child)
+      case Filter(_, child) => scan(child)
       case l: LogicalRelation => l.relation match {
         case r: HadoopFsRelation => Some(r)
         case _ => None
       }
       case _ => None
     }
-    fileScan(df.queryExecution.analyzed).map { r =>
-      val conf = df.sparkSession.sessionState.conf
-      val par = math.max(1L, df.sparkSession.sparkContext.defaultParallelism.toLong)
-      val openCost = conf.filesOpenCostInBytes
-      val total = r.location.sizeInBytes +
-        r.location.inputFiles.length.toLong * openCost
-      val maxSplit = math.min(conf.filesMaxPartitionBytes,
-        math.max(openCost, total / par))
-      if (maxSplit <= 0L) 1L else math.max(1L, (total + maxSplit - 1) / maxSplit)
+    scan(df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed)
+  }
+
+  /** An upper bound on `df`'s row count from parquet metadata: the row
+    * counts in the footers of the files it reads, when it is one parquet
+    * relation under projections and filters over at most `maxFiles`
+    * files; None otherwise. Reads one footer per file on the driver.
+    */
+  def parquetRowBound(df: DataFrame, maxFiles: Int): Option[Long] =
+    fileScan(df).filter(_.fileFormat.isInstanceOf[ParquetFileFormat]).flatMap { r =>
+      val files = r.location.listFiles(Nil, Nil).flatMap(_.files)
+      if (files.size > maxFiles) None else {
+        val hadoop = df.sparkSession.asInstanceOf[classic.SparkSession].sessionState
+          .newHadoopConfWithOptions(r.options)
+        Some(files.map(f => Using.resource(
+          ParquetFileReader.open(HadoopInputFile.fromStatus(f.fileStatus, hadoop)))(_.getRecordCount)).sum)
+      }
     }
+
+  /** Estimated scan-split count of a frame that is ONE file relation
+    * under nothing but projections and filters — None otherwise, and the
+    * caller falls back to an exact RDD probe. Any other node above the
+    * scan (coalesce, repartition, aggregate, window, join, union) sets
+    * its own partition count, so the scan's splits say nothing about the
+    * frame's. Pure metadata arithmetic over the already-cached file
+    * index, packed as [[filePartitionCount]] packs them: no physical
+    * planning, no RDD construction — the cheap replacement for
+    * `df.rdd.getNumPartitions` in Spread's "fewer splits than cores?"
+    * check, which re-planned the whole query once per call (r16 verdict
+    * called this out as per-query driver overhead). It counts every file
+    * of the relation, so a filter that prunes partition directories reads
+    * high; a bucketed relation or a set `spark.sql.files.maxPartitionNum`
+    * (which this arithmetic does not model) takes the exact probe.
+    */
+  def estimatedScanSplits(df: DataFrame): Option[Long] = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val conf = spark.sessionState.conf
+    fileScan(df)
+      .filter(r => r.bucketSpec.isEmpty && conf.filesMaxPartitionNum.isEmpty)
+      .map { r =>
+        val files = r.location.listFiles(Nil, Nil).flatMap(_.files).map(f =>
+          f.getLen -> r.fileFormat.isSplitable(spark, r.options, f.getPath))
+        filePartitionCount(files,
+          conf.filesMinPartitionNum.getOrElse(spark.leafNodeDefaultParallelism),
+          conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+      }
+  }
+
+  /** The number of partitions a file scan packs `files` ((length,
+    * splittable) pairs) into, as Spark's `FilePartition.maxSplitBytes`
+    * and `getFilePartitions` do for `minPartitions` (the leaf-node
+    * parallelism unless `spark.sql.files.minPartitionNum` is set). The
+    * split size is the total (each file plus its open cost) over
+    * `minPartitions`, clamped to [openCost, maxPartitionBytes]; every
+    * splittable file is cut into pieces of at most that size; the pieces,
+    * longest first, fill partitions in turn, and a partition closes when
+    * the next piece would take it past the split size, each piece
+    * weighing its length plus the open cost.
+    */
+  def filePartitionCount(files: Seq[(Long, Boolean)], minPartitions: Int,
+                         maxPartitionBytes: Long, openCost: Long): Long = {
+    val total = files.map(_._1 + openCost).sum
+    val split = math.min(maxPartitionBytes, math.max(openCost, total / math.max(1, minPartitions)))
+    val pieces = files.flatMap { case (len, splittable) =>
+      if (!splittable) Seq(len)
+      else (0L until len by split).map(off => math.min(split, len - off))
+    }.sortBy(-_)
+    var (partitions, current, open) = (0L, 0L, false)
+    pieces.foreach { len =>
+      if (open && current + len > split) { partitions += 1; current = 0L }
+      current += len + openCost
+      open = true
+    }
+    if (open) partitions + 1 else partitions
   }
 }

@@ -1,18 +1,29 @@
 package graft.model
 
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 class StatsCollectorSpec extends AnyFunSuite {
   private lazy val spark = graft.LocalSpark.session()
+  /** A clone that never broadcasts: `collectTable` takes its distributed
+    * scans there, while `spark` finishes small tables on the driver.
+    */
+  private lazy val scans = GraftBridge.cloneSession(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+  private lazy val paths = Seq(spark, scans)
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -67,19 +78,122 @@ class StatsCollectorSpec extends AnyFunSuite {
     assert(ModelJson.toJson(ModelJson.fromJson(json)) == json)
   }
 
-  test("every sf0.001 table reproduces its golden model byte for byte") {
-    tables.foreach { t =>
-      assert(json(StatsCollector.collectTable(read(spark, t), t, 0L)) == golden(t),
-        s"model of $t drifted from src/test/resources/model/sf0.001/$t.json")
+  // each finish by its test-name suffix: the driver finish keeps the
+  // plain names
+  for ((suffix, session) <- Seq("" -> (() => spark), " (distributed scans)" -> (() => scans))) {
+    test(s"every sf0.001 table reproduces its golden model byte for byte$suffix") {
+      tables.foreach { t =>
+        assert(json(StatsCollector.collectTable(read(session(), t), t, 0L)) == golden(t),
+          s"model of $t drifted from src/test/resources/model/sf0.001/$t.json")
+      }
+    }
+
+    test(s"the model does not depend on the input's partitioning$suffix") {
+      val models = Seq(1, 3, 8).map(n =>
+        n -> json(StatsCollector.collectTable(read(session(), "lineitem").repartition(n), "lineitem", 0L)))
+      models.foreach { case (n, m) =>
+        assert(m == golden("lineitem"), s"lineitem over $n partitions drifted")
+      }
     }
   }
 
-  test("the model does not depend on the input's partitioning") {
-    val models = Seq(1, 3, 8).map(n =>
-      n -> json(StatsCollector.collectTable(read(spark, "lineitem").repartition(n), "lineitem", 0L)))
-    models.foreach { case (n, m) =>
-      assert(m == golden("lineitem"), s"lineitem over $n partitions drifted")
+  test("both finishes give the same model of every sf0.01 TPC-H table") {
+    val sf = "/root/testdata/sf0.01"
+    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem").foreach { t =>
+      val Seq(driver, distributed) = paths.map { s =>
+        json(StatsCollector.collectTable(s.read.parquet(s"$sf/$t.parquet"), t, 0L))
+      }
+      assert(driver == distributed, s"$t: the driver finish and the scans disagree")
     }
+  }
+
+  /** Values where Spark's semantics are easy to miss: nulls and an
+    * all-null column, empty and whitespace-only strings, ±0.0 (kept off
+    * the extremes, where Spark's own min/max keep whichever merges
+    * first), NaN, large magnitudes (within decimal(38,10), the mean's
+    * type), doubles whose decimal cast rounds differently from their
+    * binary expansion, and one column of every other model type.
+    */
+  private def edgeCases(s: SparkSession, rows: Int): DataFrame = {
+    val schema = StructType(Seq(
+      StructField("id", IntegerType), StructField("none", DoubleType), StructField("txt", StringType),
+      StructField("zeros", DoubleType), StructField("nan", DoubleType), StructField("big", DoubleType),
+      StructField("noise", DoubleType), StructField("dec", DecimalType(12, 4)),
+      StructField("day", DateType), StructField("ts", TimestampType),
+      StructField("ntz", TimestampNTZType), StructField("flag", BooleanType)))
+    val rnd = new scala.util.Random(7)
+    val texts = IndexedSeq("", " ", "   ", "a", "a b", " a  b ", null)
+    val zeros = IndexedSeq(-2.5, 0.0, -0.0, 3.75, null)
+    val nans = IndexedSeq(1.0, Double.NaN, -0.0, 0.0, 2.5e-7, -1.5, null)
+    val big = IndexedSeq(9.9e26, -4.2e25, 1e20, 0.30000000000000004, 5e-7, -5e-7, 1.0000005, null)
+    val data = (0 until rows).map { i =>
+      Row(if (i % 5 == 4) null else i, null, texts(i % texts.size), zeros(i % zeros.size),
+        nans(i % nans.size), big(i % big.size),
+        if (i % 9 == 8) null else (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(30) - 8),
+        if (i % 6 == 5) null else java.math.BigDecimal.valueOf(rnd.nextInt(2000000) - 1000000L, 4),
+        if (i % 7 == 6) null else java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(9000L + rnd.nextInt(3000))),
+        if (i % 8 == 7) null else new java.sql.Timestamp(1000L * (900000000L + rnd.nextInt(100000000))),
+        if (i % 4 == 3) null else java.time.LocalDateTime.of(2020, 1, 1, 0, 0).plusSeconds(rnd.nextInt(10000000)),
+        if (i % 3 == 2) null else i % 2 == 0)
+    }
+    s.createDataFrame(java.util.Arrays.asList(data: _*), schema)
+  }
+
+  test("both finishes agree byte for byte on the edge-case fixture and on an empty table") {
+    Seq(600, 0).foreach { rows =>
+      val Seq(driver, distributed) = paths.map { s =>
+        json(StatsCollector.collectTable(edgeCases(s, rows), "edge", 0L))
+      }
+      assert(driver == distributed, s"$rows rows: the driver finish and the scans disagree\n$driver\n$distributed")
+    }
+  }
+
+  test("a small table takes one Spark job, and leaves no conf change or persisted RDD") {
+    val s = graft.LocalSpark.session()
+    val sc = s.sparkContext
+    val group = s"stats-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      tables.foreach { t =>
+        val df = read(s, t) // the footer read is the reader's job, not the collector's
+        val (conf, persisted) = (s.conf.getAll, sc.getPersistentRDDs.keySet)
+        ListenerBusDrain(sc)
+        jobs.set(0)
+        sc.setJobGroup(group, group)
+        try StatsCollector.collectTable(df, t, 0L) finally sc.clearJobGroup()
+        ListenerBusDrain(sc)
+        assert(jobs.get == 1, s"$t: ${jobs.get} Spark jobs")
+        assert(s.conf.getAll == conf, s"$t: session conf changed")
+        assert(sc.getPersistentRDDs.keySet == persisted, s"$t: persisted RDDs left behind")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a table rewritten in place gets a fresh model, an unchanged one the memoized model") {
+    val dir = Files.createTempDirectory("graft_stats_memo_").toFile
+    def deleteRec(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(deleteRec))
+      f.delete(); ()
+    }
+    try {
+      val path = s"$dir/t.parquet"
+      def model = StatsCollector.collect(spark, dir.toString, Seq("t"))
+      spark.range(0, 100).toDF("id").write.parquet(path)
+      val first = model
+      assert(first.tables.head.stats.get.rows == 100L)
+      assert(model eq first, "an unchanged table must hit the memo")
+      spark.range(0, 250).toDF("id").write.mode("overwrite").parquet(path)
+      val second = model
+      assert(second.tables.head.stats.get.rows == 250L, "the memo returned the model of the old files")
+      assert(json(second.tables.head) ==
+        json(StatsCollector.collectTable(spark.read.parquet(path), "t", second.tables.head.stats.get.sizeBytes)))
+    } finally deleteRec(dir)
   }
 
   test("approx mode stays within 5% on distinct counts") {
@@ -108,8 +222,10 @@ class StatsCollectorSpec extends AnyFunSuite {
     }
 
   test("plan shape: every aggregate is in whole-stage codegen, same width for every table") {
-    // a child session scopes the listener to this test's queries
-    val s = spark.newSession()
+    // a clone scopes the listener to this test's queries; it never
+    // broadcasts, so it takes the scans (the driver finish plans no
+    // aggregate)
+    val s = GraftBridge.cloneSession(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val plans = mutable.ArrayBuffer.empty[SparkPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -120,7 +236,7 @@ class StatsCollectorSpec extends AnyFunSuite {
     def aggregateExprs(t: String): Int = {
       plans.synchronized(plans.clear())
       StatsCollector.collectTable(read(s, t), t, 0L)
-      org.apache.spark.ListenerBusDrain(s.sparkContext)
+      ListenerBusDrain(s.sparkContext)
       val aggs = plans.synchronized(plans.toList).flatMap(aggregates(_))
       assert(aggs.nonEmpty, s"no aggregate planned for $t")
       aggs.foreach { case (a, inCodegen) =>

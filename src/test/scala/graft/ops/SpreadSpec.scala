@@ -57,4 +57,29 @@ class SpreadSpec extends AnyFunSuite {
     assert(est.exists(_ < par), s"bare single-file read estimated at $est splits")
     assert(Spread(docs).rdd.getNumPartitions == par)
   }
+
+  test("the metadata estimate equals Spark's own split count on every sf0.001 table") {
+    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+        "documents", "embeddings", "events").foreach { t =>
+      val df = graft.Tables.load(spark, "/root/testdata/sf0.001", t)
+      assert(GraftBridge.estimatedScanSplits(df) == Some(df.rdd.getNumPartitions.toLong), t)
+    }
+  }
+
+  test("file packing arithmetic follows FilePartition at parallelism 2") {
+    val (mb, open) = (1L << 20, 4L << 20)
+    def parts(files: Long*) = GraftBridge.filePartitionCount(files.map(_ -> true), 2, 128 * mb, open)
+    // one small file: the split size is the open cost, and the file is
+    // one piece in one partition (a (bytes + open cost) / split estimate
+    // reads 2 here)
+    assert(parts(100000L) == 1L)
+    // (10 MB + 4 MB) / 2 = 7 MB splits: pieces 7 and 3 MB, one partition each
+    assert(parts(10 * mb) == 2L)
+    // three 1 MB files, (3 × 5 MB) / 2 = 7.5 MB splits: the first two
+    // share a partition (1 + 4 + 1 ≤ 7.5), the third would pass it
+    assert(parts(mb, mb, mb) == 2L)
+    // an unsplittable file stays one piece however large
+    assert(GraftBridge.filePartitionCount(Seq((300 * mb) -> false), 2, 128 * mb, open) == 1L)
+    assert(parts() == 0L)
+  }
 }
