@@ -24,7 +24,7 @@ object Bench {
     * argv can not false-positive.
     */
   private val contaminantClasses = Seq(
-    "graft.lab.TailCampaign", "graft.lab.FailedRetry", "graft.tools.GruSweep")
+    "graft.lab.TailCampaign", "graft.lab.FailedRetry", "graft.estimate.Evaluate")
 
   /** Names of resident campaign processes found in `psOutput`, empty
     * when the box is clean. Pure function of the listing (spec-tested).

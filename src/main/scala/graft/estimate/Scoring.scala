@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions.{col, isnan, lit, pow, when}
   * java-serializable. The job is one narrow map over however the
   * workload is already partitioned — zero shuffles, zero collects —
   * and per-row work is exactly the encode+forward the driver-side
-  * sweep does ([[graft.tools.GruSweep]]).
+  * evaluation does ([[Evaluate]]).
   *
   * All six persisted families serve through the same surface: the
   * checkpoint's `kind` tag ([[ModelIo.kindOf]]) picks the encoder +
@@ -38,42 +38,29 @@ object Scoring {
     * the distributed scores equal the local ones.
     *
     * Per family, reproduces the exact encode→normalize→forward chain
-    * its [[graft.tools.GruSweep]] section trains with: flat traversal
-    * matrix for gru/relcnn, parent-linked tree for gru4/treelstm, the
-    * raw binary set matrices for mscn (no z-score, by reference
-    * convention), the flat neo bit vector for neonet. For the `gru`
-    * bucket CLASSIFIER the returned value is the predicted bucket as a
-    * double — its bucket center 2^b is then the same `est_seconds` the
-    * regressors' 2^log2 is.
+    * its [[Evaluate]] row trains with (EvaluateSpec reloads every saved
+    * model through here): flat traversal matrix for gru/relcnn,
+    * parent-linked tree for gru4/treelstm, the raw binary set matrices
+    * for mscn (no z-score, by reference convention), the flat neo bit
+    * vector for neonet. For the `gru` bucket CLASSIFIER the returned
+    * value is the predicted bucket as a double — its bucket center 2^b is
+    * then the same `est_seconds` the regressors' 2^log2 is.
     */
   def predictorFor(modelJson: String, statsJson: String): String => Double = {
     val db = graft.model.ModelJson.fromJson(statsJson)
-    def zApply(norm: Option[(Array[Double], Array[Double])],
-               raw: Array[Array[Double]]): Array[Array[Double]] = norm match {
-      case Some((m, sd)) => raw.map { row =>
-        Array.tabulate(row.length)(i => (row(i) - m(i)) / sd(i)) }
-      case None => raw
-    }
-    def flat(sql: String, dim: Int): Array[Array[Double]] =
-      graft.encode.SetEncoders.flatMatrix(db, sql).map(_.padTo(dim, 0.0))
-    def tree(sql: String, dim: Int,
-             norm: Option[(Array[Double], Array[Double])]): Gru4.Tree = {
-      val (parents, vecs) = graft.encode.SetEncoders.treeWithParents(db, sql)
-      Gru4.fromParents(parents, zApply(norm, vecs.map(_.padTo(dim, 0.0))))
-    }
     ModelIo.kindOf(modelJson) match {
       case "gru" =>
         val (m, norm) = ModelIo.loadGruNormFromJson(modelJson)
-        sql => m.predict(zApply(norm, flat(sql, m.p.cfg.inputDim))).toDouble
+        sql => m.predict(Evaluate.flatRows(db, sql, m.p.cfg.inputDim, norm)).toDouble
       case "gru4" =>
         val (m, norm) = ModelIo.loadGru4NormFromJson(modelJson)
-        sql => m.predict(tree(sql, m.p.cfg.inputDim, norm))
+        sql => m.predict(Evaluate.treeOf(db, sql, m.p.cfg.inputDim, norm))
       case "treelstm" =>
         val (m, norm) = ModelIo.loadTreeLstmNormFromJson(modelJson)
-        sql => m.predict(tree(sql, m.p.cfg.inputDim, norm))
+        sql => m.predict(Evaluate.treeOf(db, sql, m.p.cfg.inputDim, norm))
       case "relcnn" =>
         val (m, norm) = ModelIo.loadRelCnnNormFromJson(modelJson)
-        sql => m.predict(zApply(norm, flat(sql, m.p.cfg.inputDim)))
+        sql => m.predict(Evaluate.flatRows(db, sql, m.p.cfg.inputDim, norm))
       case "mscn" =>
         val m = ModelIo.loadMscnFromJson(modelJson)
         sql => m.predictLog2(

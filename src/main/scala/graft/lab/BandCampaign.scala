@@ -123,7 +123,7 @@ object BandCampaign {
       f"acc=${r.testAcc}%.3f mae=${r.testMae}%.3f f1=${r.testF1}%.3f")
     println(f"[band] heldout in the reference's bucket space (<=1s -> bucket 0): " +
       f"acc=${r.testRefAcc}%.3f mae=${r.testRefMae}%.3f f1=${r.testRefF1}%.3f " +
-      "(capacity sweep + learning curve: graft.tools.BandRetrain)")
+      "(capacity sweep + learning curve: graft.estimate.Evaluate gbt)")
     spark.stop()
   }
 }

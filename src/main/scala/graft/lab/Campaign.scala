@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 import graft.Tables
-import graft.estimate.Estimator
+import graft.estimate.{Estimator, Evaluate}
 import graft.gen.{BalancedCheckpoint, BalancedQueryGen}
 import graft.model.StatsCollector
 
@@ -107,11 +107,7 @@ object Campaign {
       gen.counts.mkString("[", ",", "]"))
 
     val usable = measured.filter(_._2 > 0)
-    val (test, train) = usable.partition { case (sql, _) =>
-      // stable 25% holdout: low byte of the SQL's CRC
-      val c = new java.util.zip.CRC32(); c.update(sql.getBytes("UTF-8"))
-      (c.getValue & 0xff) < 64
-    }
+    val (test, train) = usable.partition { case (sql, _) => Evaluate.isHoldout(sql) }
     println(s"[campaign] training GBT on ${train.size} measured runtimes " +
       s"(holding out ${test.size})")
     val model = Estimator.train(spark, db, train, maxIter = 15)
@@ -124,20 +120,13 @@ object Campaign {
     val (rAcc, rMae, rF1) =
       if (test.nonEmpty) Estimator.evaluate(preds(test), minBucket = 0)
       else (0.0, 0.0, 0.0)
-    // bucket-balanced variant (training set only; see BandRetrain's
-    // experiment — +0.2 held-out macro-F1 at n=247): cyclic
+    // bucket-balanced variant (training set only; see the gbt rows of
+    // graft.estimate.Evaluate — +0.2 held-out macro-F1 at n=247): cyclic
     // oversampling of each ref-space bucket to the majority count
     // reweights the squared loss the reference's bucket-balanced
     // campaign had by construction
     if (test.nonEmpty) {
-      def refBucket(rt: Double): Int =
-        if (rt <= 1.0) 0
-        else math.min(8, math.floor(math.log(rt) / math.log(2)).toInt)
-      val byBucket = train.groupBy { case (_, rt) => refBucket(rt) }
-      val cap = byBucket.values.map(_.size).max
-      val balanced = byBucket.toSeq.sortBy(_._1).flatMap { case (_, xs) =>
-        Iterator.continually(xs).flatten.take(cap).toSeq
-      }
+      val balanced = Evaluate.balance(train, Evaluate.refBucket)
       val bModel = Estimator.train(spark, db, balanced, maxIter = 40)
       val bPreds = test.map { case (sql, rt) =>
         (bModel.predictLog2(Estimator.featurize(db, sql)), math.log(rt) / math.log(2))

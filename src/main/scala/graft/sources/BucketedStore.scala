@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Physical-layout sinks for the 100 TB path: bucketed and partitioned
   * parquet, plus the co-located-join reader that proves the layout pays
@@ -221,30 +221,23 @@ object BucketedStore {
     // AQE's local shuffle read undoes the repartition-to-bucket
     // alignment in a write-only topology (each write task then reads
     // mapper-local blocks spanning ALL buckets → tasks × buckets output
-    // files, measured empirically); pin it off for just this write
-    val lsrKey = "spark.sql.adaptive.localShuffleReader.enabled"
-    val lsrWas = spark.conf.getOption(lsrKey)
-    spark.conf.set(lsrKey, "false")
-    try {
-      // read the FILES, not the catalog table: a bucketed-table source
-      // lets the planner treat the repartition as redundant (its
-      // declared partitioning already matches) even when the bucketed
-      // scan itself is disabled, and the write then emits the full
-      // tasks × buckets file cross product. A plain parquet read keeps
-      // the exchange in the plan (bucket ids live only in file names,
-      // so no data is lost)
-      spark.read.parquet(oldLoc.toString)
-        .repartition(n, col(key))
-        .write.format("parquet")
-        .bucketBy(n, key).sortBy(key)
-        .option("path", newLoc.toString)
-        .saveAsTable(staging)
-    } finally {
-      lsrWas match {
-        case Some(v) => spark.conf.set(lsrKey, v)
-        case None => spark.conf.unset(lsrKey)
-      }
-    }
+    // files, measured empirically); it is off for just this write, on a
+    // clone, so the caller's session and its concurrent queries never
+    // see the change
+    val writer = GraftBridge.cloneSession(spark,
+      "spark.sql.adaptive.localShuffleReader.enabled" -> "false")
+    // read the FILES, not the catalog table: a bucketed-table source
+    // lets the planner treat the repartition as redundant (its declared
+    // partitioning already matches) even when the bucketed scan itself
+    // is disabled, and the write then emits the full tasks × buckets
+    // file cross product. A plain parquet read keeps the exchange in
+    // the plan (bucket ids live only in file names, so no data is lost)
+    writer.read.parquet(oldLoc.toString)
+      .repartition(n, col(key))
+      .write.format("parquet")
+      .bucketBy(n, key).sortBy(key)
+      .option("path", newLoc.toString)
+      .saveAsTable(staging)
     val graftProps = meta.properties.filter(_._1.startsWith("graft."))
     if (graftProps.nonEmpty)
       spark.sql(s"ALTER TABLE $staging SET TBLPROPERTIES(" +

@@ -6,8 +6,8 @@ import graft.gen.{BalancedCheckpoint, Log2Partitioner}
 
 /** Merge several band-campaign checkpoints (independent generator
   * streams, [[graft.lab.BandCampaign]]'s `seed` argument) into one
-  * TRAINING-ONLY checkpoint file that BandRetrain / GruSweep /
-  * LearningCurve consume unchanged.
+  * TRAINING-ONLY checkpoint file that [[graft.estimate.Evaluate]]
+  * consumes unchanged.
   *
   * Results are concatenated in argument order and deduplicated by SQL
   * text keeping the FIRST measurement — so re-merging after the primary

@@ -16,6 +16,9 @@ class BenchGuardSpec extends AnyFunSuite {
     "java -Xmx14g -cp /tmp/c:/opt/spark/jars/* graft.lab.FailedRetry " +
       "/root/testdata/sf0.1 160 /tmp/graft_band b 1500 0 1 m.json seed.cp /tmp/pool"
   private val babysitLine = "/bin/bash tools/fleet_babysit.sh"
+  private val evaluateLine =
+    "java -Xmx8g -cp /tmp/c:/opt/spark/jars/* graft.estimate.Evaluate " +
+      "v20,mlp,gbt data/band/campaign_x160_c2.cp data/band/x160/stats.json"
 
   test("clean listing yields no contaminants") {
     val ps = Seq(
@@ -39,6 +42,12 @@ class BenchGuardSpec extends AnyFunSuite {
       "sh -c ps -eo args | grep -c graft.lab.TailCampaign|graft.lab.FailedRetry")
       .mkString("\n")
     assert(Bench.contaminants(ps).isEmpty)
+  }
+
+  test("a resident estimator evaluation is named") {
+    // its seed fan-out saturates every core for the whole run
+    val ps = Seq("java -cp /tmp/c:/opt/spark/jars/* graft.Bench", evaluateLine).mkString("\n")
+    assert(Bench.contaminants(ps) == Seq("graft.estimate.Evaluate"))
   }
 
   test("duplicate residents collapse to one name") {

@@ -108,8 +108,15 @@ class BucketedStoreSpec extends AnyFunSuite {
     val before = probe().collect().map(_.toSeq).toSet
     assert(before.nonEmpty, "probe batch must collide with the index")
 
+    // the write's conf lives on a clone: the caller's session keeps its
+    // own value of the key, unset staying unset (getAll lists only set
+    // keys; getOption would report the default)
+    val lsrKey = "spark.sql.adaptive.localShuffleReader.enabled"
+    assert(spark.conf.getAll.get(lsrKey).isEmpty)
     val written = BucketedStore.compactBucketed(spark, "lsh_cmp")
     assert(written == 4, s"compaction should leave one file per bucket, got $written")
+    assert(spark.conf.getAll.get(lsrKey).isEmpty,
+      s"compaction leaked $lsrKey=${spark.conf.getAll.get(lsrKey)} into the caller")
 
     // same candidates, probe contract (graft.lsh.* properties) intact,
     // and the index side still reads its buckets in place — no shuffle
@@ -134,8 +141,13 @@ class BucketedStoreSpec extends AnyFunSuite {
       s"compacted index side shuffled:\n$idxSide")
 
     // a second compaction swaps the location back — still one file per
-    // bucket and the probe still answers
-    assert(BucketedStore.compactBucketed(spark, "lsh_cmp") == 4)
+    // bucket (with the caller's session set to the value that would
+    // scatter the write, and keeping it) and the probe still answers
+    spark.conf.set(lsrKey, "true")
+    try {
+      assert(BucketedStore.compactBucketed(spark, "lsh_cmp") == 4)
+      assert(spark.conf.getAll.get(lsrKey).contains("true"))
+    } finally spark.conf.unset(lsrKey)
     assert(probe().collect().map(_.toSeq).toSet == before)
   }
 

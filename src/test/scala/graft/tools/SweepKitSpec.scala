@@ -2,17 +2,20 @@ package graft.tools
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The concurrency contract [[SweepKit.parSeeds]] gives the sweeps:
-  * results come back in seed order (a vote over per-seed prediction
-  * columns must line up with the seeds list no matter which thread
-  * finished first), and a failing fit fails the whole sweep instead of
-  * leaving a null ensemble member behind.
+import graft.estimate.Evaluate
+
+/** The band-sweep helpers of [[Evaluate]]. The concurrency contract
+  * [[Evaluate.parSeeds]] gives the seed ensembles: results come back in
+  * seed order (a vote over per-seed prediction columns must line up with
+  * the seeds list no matter which thread finished first), and a failing
+  * fit fails the whole run instead of leaving a null ensemble member
+  * behind.
   */
 class SweepKitSpec extends AnyFunSuite {
 
   test("parSeeds preserves seed order regardless of completion order") {
     val seeds = Seq(1L, 2L, 3L, 4L)
-    val out = SweepKit.parSeeds(seeds) { s =>
+    val out = Evaluate.parSeeds(seeds) { s =>
       Thread.sleep((5 - s) * 20) // later seeds finish first
       s * 10
     }
@@ -25,13 +28,13 @@ class SweepKitSpec extends AnyFunSuite {
       val rnd = new scala.util.Random(s)
       Seq.fill(16)(rnd.nextDouble())
     }
-    assert(SweepKit.parSeeds(seeds)(fit) == seeds.map(fit))
+    assert(Evaluate.parSeeds(seeds)(fit) == seeds.map(fit))
   }
 
   test("classWeights: inverse frequency, capped, empty class -> 0") {
     // 8 examples of class 0, 2 of class 1, none of class 2
     val labels = Seq.fill(8)(0) ++ Seq.fill(2)(1)
-    val w = SweepKit.classWeights(labels, classes = 3, cap = 10.0)
+    val w = Evaluate.classWeights(labels, classes = 3, cap = 10.0)
     assert(math.abs(w(0) - 10.0 / (3 * 8)) < 1e-12)
     assert(math.abs(w(1) - 10.0 / (3 * 2)) < 1e-12)
     assert(w(2) == 0.0, "an empty class must get weight 0, not infinity")
@@ -39,7 +42,7 @@ class SweepKitSpec extends AnyFunSuite {
     assert(math.abs(w(1) / w(0) - 4.0) < 1e-12)
     // the cap binds on a near-empty class in a large population
     val extreme = Seq.fill(1000)(0) ++ Seq.fill(1)(1)
-    val cw = SweepKit.classWeights(extreme, classes = 2, cap = 10.0)
+    val cw = Evaluate.classWeights(extreme, classes = 2, cap = 10.0)
     assert(cw(1) == 10.0, s"cap must bind, got ${cw(1)}")
   }
 
@@ -60,7 +63,7 @@ class SweepKitSpec extends AnyFunSuite {
       (s"SELECT MIN(ta.x) FROM ta WHERE ta.id > $i", 0.5))
     val tail = Seq(("SELECT MIN(ta.x) FROM ta, tb, tc " +
       "WHERE ta.id = tb.id AND tb.id = tc.id AND ta.x > 3 AND tc.z < 90", 40.0))
-    val out = SweepKit.augmentPerBucket(majority ++ tail, db,
+    val out = Evaluate.augmentPerBucket(majority ++ tail, db,
       capLimit = 8, holdout = Set.empty)
     val tailRows = out.count(_._2 == 40.0)
     val majRows = out.count(_._2 == 0.5)
@@ -75,7 +78,7 @@ class SweepKitSpec extends AnyFunSuite {
   test("parSeeds rethrows a member failure after all threads settle") {
     val hit = new java.util.concurrent.atomic.AtomicInteger(0)
     val e = intercept[IllegalStateException] {
-      SweepKit.parSeeds(Seq(1L, 2L, 3L)) { s =>
+      Evaluate.parSeeds(Seq(1L, 2L, 3L)) { s =>
         hit.incrementAndGet()
         if (s == 2L) throw new IllegalStateException("fit died")
         s
