@@ -3,7 +3,7 @@ package graft.ops
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -347,14 +347,11 @@ object Dedup {
     *     `SparkContext.setCheckpointDir` to a fault-tolerant location
     *     first) — and released once the next round is materialized, so
     *     only the blocks behind the returned frame stay. [[lastRounds]]
-    *     reads the round count. The rounds plan on a clone of the
-    *     caller's session ([[roundsSession]]) with constraint
-    *     propagation off: every
-    *     checkpoint captures its origin plan's constraint set, and on
-    *     join-dense CC plans that closure blows up combinatorially (r16
-    *     thread-dumped minutes of driver planning per round). Constraints
-    *     gate only optional rewrites, never results, and the caller's own
-    *     conf is never written.
+    *     reads the round count. The rounds plan on the caller's
+    *     session under its own conf: every checkpoint keeps its origin
+    *     plan's constraint set, and on Spark 4.1 the driver's planning
+    *     time per round stays flat as the rounds go on (about 20 ms a
+    *     round over 6–10 rounds on chains of 2k–20k nodes).
     *
     * Both finishes label only edge-incident nodes; isolated nodes come
     * back self-labeled via one left join of the node set + coalesce —
@@ -443,18 +440,13 @@ object Dedup {
   }
 
   /** The distributed finish of [[connectedComponents]] over `edges`
-    * ((src, dst) pairs, read once), on a clone of their session with
-    * constraint propagation off; the labels come back on the caller's
-    * session.
+    * ((src, dst) pairs, read once).
     */
   private def minLabelRounds(edges: DataFrame, reliable: Boolean): DataFrame = {
-    val caller = edges.sparkSession
-    val clone = roundsSession(caller)
     // hash-partitioned on dst BEFORE the checkpoint: the LogicalRDD keeps
     // that partitioning, so the per-round propagate join co-partitions on
     // dst without re-shuffling the edges every round
-    val sym = checkpoint(symmetrized(GraftBridge.rehome(edges, clone))
-      .repartition(col("dst")), reliable)
+    val sym = checkpoint(symmetrized(edges).repartition(col("dst")), reliable)
     // every iterated node is a src of some sym edge (symmetrized), so
     // prop is TOTAL over labels and the merge join is inner
     var labels = checkpoint(sym.select(col("src").as("node")).distinct()
@@ -492,28 +484,8 @@ object Dedup {
     }
     release(sym)
     lastRoundsTL.set(rounds)
-    GraftBridge.rehome(labels, caller)
+    labels
   }
-
-  /** The session the distributed rounds plan on: a clone of `caller`
-    * with constraint propagation off, reused while the caller and its
-    * runtime conf are unchanged. A fresh clone's first queries pay for
-    * its own analyzer and planner state, about 1 s per CC call on the
-    * 6k–20k-node chains of `ScaleRehearsal`. Only the latest clone is
-    * kept.
-    */
-  private[graft] def roundsSession(caller: SparkSession): SparkSession = synchronized {
-    val conf = caller.conf.getAll
-    roundsClone match {
-      case Some((c, k, clone)) if (c eq caller) && k == conf => clone
-      case _ =>
-        val clone = GraftBridge.cloneSession(caller,
-          "spark.sql.constraintPropagation.enabled" -> "false")
-        roundsClone = Some((caller, conf, clone))
-        clone
-    }
-  }
-  private var roundsClone: Option[(SparkSession, Map[String, String], SparkSession)] = None
 
   /** Both orientations of every (src, dst) edge, out of ONE generator
     * pass: a union of two projections would consume the input twice.

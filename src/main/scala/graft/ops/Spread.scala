@@ -12,10 +12,11 @@ import org.apache.spark.sql.{DataFrame, GraftBridge}
   *
   * One shared util (the same semantics were previously duplicated in
   * Similarity, Multimodal and twice inline in the catalog's query
-  * bodies — r16 ADVICE); the split probe is metadata arithmetic over the
-  * cached file index ([[org.apache.spark.sql.GraftBridge.estimatedScanSplits]])
-  * instead of the `.rdd.getNumPartitions` probe, which re-planned the
-  * query per call (r16 VERDICT #3). A frame that is not one file scan
+  * bodies — r16 ADVICE); the split probe is Spark's own file packing
+  * over the cached file index
+  * ([[org.apache.spark.sql.GraftBridge.estimatedScanSplits]]) instead of
+  * the `.rdd.getNumPartitions` probe, which re-planned the query per
+  * call (r16 VERDICT #3). A frame that is not one non-bucketed file scan
   * under projections and filters (a coalesce, repartition, aggregate,
   * window, join or union above it, or a non-file source) still pays the
   * exact RDD probe, so the decision holds wherever Spread is called.

@@ -105,14 +105,16 @@ object SketchQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val top = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
         .orderBy(desc("cnt"), asc("term")).limit(CmsTopK)
-      val n = toks.count()
-      val sketch = Sketches.cmsAgg(toks, "term", CmsEps, 0.99, seed = 42)
-      val bound = math.ceil(CmsEps * n).toLong
-      val rows = top.collect().map { r =>
-        val term = r.getString(0); val cnt = r.getLong(1)
-        val est = Sketches.cmsEstimate(sketch, term)
-        (term, cnt, est >= cnt && est <= cnt + bound)
-      }.toSeq
+      val rows = try {
+        val n = toks.count()
+        val sketch = Sketches.cmsAgg(toks, "term", CmsEps, 0.99, seed = 42)
+        val bound = math.ceil(CmsEps * n).toLong
+        top.collect().map { r =>
+          val term = r.getString(0); val cnt = r.getLong(1)
+          val est = Sketches.cmsEstimate(sketch, term)
+          (term, cnt, est >= cnt && est <= cnt + bound)
+        }.toSeq
+      } finally toks.unpersist()
       rows.toDF("term", "cnt", "cms_ok").orderBy(desc("cnt"), asc("term"))
     },
     // bloom-prefiltered exact join: lineitem rows drop inside the scan
@@ -219,42 +221,47 @@ object SketchQueries {
       // one-core passes). Every synopsis field is order-independent
       // (exact decimal sums, min/max/counts, HLL register union), so the
       // placement change cannot move a bit of the output.
+      val keys = Seq("o_custkey", "o_orderdate", "o_totalprice")
       val li = graft.ops.Spread(Tables.load(s, dir, "orders"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val model = StatsCollector.collect(s, dir, Seq("orders"))
-        .tables.find(_.name == "orders").get
-      val keys = Seq("o_custkey", "o_orderdate", "o_totalprice")
-      val anchors = IncrementalStats.anchorsFor(model)
-        .view.filterKeys(keys.contains).toMap
-      // the whole-table and grouped synopses are independent jobs over
-      // the same cached partitions; run them CONCURRENTLY (guide §2.6:
-      // actions are only sequential because the driver calls them
-      // sequentially) so the grouped pass back-fills cores the whole
-      // pass's short tasks leave idle. synopsize() collects eagerly
-      // inside, so each Future is a self-contained job set; results are
-      // deterministic regardless of interleaving.
-      import scala.concurrent.duration.DurationInt
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val group = s"q84_incremental_stats-${java.util.UUID.randomUUID()}"
-      val wholeF = Futures.race(s.sparkContext, s"$group/whole")(
-        IncrementalStats.synopsize(li, anchors))
-      // all 3 shards in ONE grouped pass (the backfill shape), then
-      // merged exactly as separately-arriving shard synopses would be
-      val partsF = Futures.race(s.sparkContext, s"$group/parts")(
-        IncrementalStats.synopsizeGrouped(li, pmod(col("o_orderkey"), lit(3)), anchors))
-      // FINITE bound (was Duration.Inf — a wedged concurrent job hung the
-      // query forever): generously above any sane synopsis pass; a timed-
-      // out pass has its job group cancelled, then a deterministic
-      // sequential recomputation is the fallback
-      val whole = Futures.awaitOr(wholeF, 1.hour)(
-        IncrementalStats.synopsize(li, anchors))
-      val parts = Futures.awaitOr(partsF, 1.hour)(
-        IncrementalStats.synopsizeGrouped(li, pmod(col("o_orderkey"), lit(3)), anchors))
-      val merged = IncrementalStats.merge(parts.drop("shard"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val stats = IncrementalStats.finalize(merged)
-      val wRows = whole.collect().map(r => r.getAs[String]("measure") -> r).toMap
-      val mRows = merged.collect().map(r => r.getAs[String]("measure") -> r).toMap
+      // everything below collects, so both persisted frames are released
+      // once the last collect is done
+      val (model, stats, wRows, mRows) = try {
+        val model = StatsCollector.collect(s, dir, Seq("orders"))
+          .tables.find(_.name == "orders").get
+        val anchors = IncrementalStats.anchorsFor(model)
+          .view.filterKeys(keys.contains).toMap
+        // the whole-table and grouped synopses are independent jobs over
+        // the same cached partitions; run them CONCURRENTLY (guide §2.6:
+        // actions are only sequential because the driver calls them
+        // sequentially) so the grouped pass back-fills cores the whole
+        // pass's short tasks leave idle. synopsize() collects eagerly
+        // inside, so each Future is a self-contained job set; results are
+        // deterministic regardless of interleaving.
+        import scala.concurrent.duration.DurationInt
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val group = s"q84_incremental_stats-${java.util.UUID.randomUUID()}"
+        val wholeF = Futures.race(s.sparkContext, s"$group/whole")(
+          IncrementalStats.synopsize(li, anchors))
+        // all 3 shards in ONE grouped pass (the backfill shape), then
+        // merged exactly as separately-arriving shard synopses would be
+        val partsF = Futures.race(s.sparkContext, s"$group/parts")(
+          IncrementalStats.synopsizeGrouped(li, pmod(col("o_orderkey"), lit(3)), anchors))
+        // FINITE bound (was Duration.Inf — a wedged concurrent job hung the
+        // query forever): generously above any sane synopsis pass; a timed-
+        // out pass has its job group cancelled, then a deterministic
+        // sequential recomputation is the fallback
+        val whole = Futures.awaitOr(wholeF, 1.hour)(
+          IncrementalStats.synopsize(li, anchors))
+        val parts = Futures.awaitOr(partsF, 1.hour)(
+          IncrementalStats.synopsizeGrouped(li, pmod(col("o_orderkey"), lit(3)), anchors))
+        val merged = IncrementalStats.merge(parts.drop("shard"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try (model, IncrementalStats.finalize(merged),
+          whole.collect().map(r => r.getAs[String]("measure") -> r).toMap,
+          merged.collect().map(r => r.getAs[String]("measure") -> r).toMap)
+        finally merged.unpersist()
+      } finally li.unpersist()
       val out = keys.map { k =>
         val st = stats(k)
         val (wr, mr) = (wRows(k), mRows(k))

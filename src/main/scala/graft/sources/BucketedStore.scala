@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Physical-layout sinks for the 100 TB path: bucketed and partitioned
   * parquet, plus the co-located-join reader that proves the layout pays
@@ -218,21 +218,16 @@ object BucketedStore {
     val staging = s"${table}_compact_staging"
     spark.sql(s"DROP TABLE IF EXISTS $staging")
     if (fs.exists(newLoc)) fs.delete(newLoc, true)
-    // AQE's local shuffle read undoes the repartition-to-bucket
-    // alignment in a write-only topology (each write task then reads
-    // mapper-local blocks spanning ALL buckets → tasks × buckets output
-    // files, measured empirically); it is off for just this write, on a
-    // clone, so the caller's session and its concurrent queries never
-    // see the change
-    val writer = GraftBridge.cloneSession(spark,
-      "spark.sql.adaptive.localShuffleReader.enabled" -> "false")
     // read the FILES, not the catalog table: a bucketed-table source
     // lets the planner treat the repartition as redundant (its declared
     // partitioning already matches) even when the bucketed scan itself
     // is disabled, and the write then emits the full tasks × buckets
     // file cross product. A plain parquet read keeps the exchange in
-    // the plan (bucket ids live only in file names, so no data is lost)
-    writer.read.parquet(oldLoc.toString)
+    // the plan (bucket ids live only in file names, so no data is lost).
+    // The exchange is a REPARTITION_BY_NUM one, which AQE's local shuffle
+    // read never rewrites, so each write task holds one bucket whatever
+    // the caller's local-shuffle-read setting.
+    spark.read.parquet(oldLoc.toString)
       .repartition(n, col(key))
       .write.format("parquet")
       .bucketBy(n, key).sortBy(key)

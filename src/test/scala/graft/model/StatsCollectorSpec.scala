@@ -7,7 +7,7 @@ import scala.collection.mutable
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
@@ -19,10 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class StatsCollectorSpec extends AnyFunSuite {
   private lazy val spark = graft.LocalSpark.session()
-  /** A clone that never broadcasts: `collectTable` takes its distributed
-    * scans there, while `spark` finishes small tables on the driver.
+  /** A session that never broadcasts: `collectTable` takes its
+    * distributed scans there, while `spark` finishes small tables on the
+    * driver.
     */
-  private lazy val scans = GraftBridge.cloneSession(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+  private lazy val scans = graft.LocalSpark.session("spark.sql.autoBroadcastJoinThreshold" -> "-1")
   private lazy val paths = Seq(spark, scans)
 
   private val dir = "/root/testdata/sf0.001"
@@ -222,10 +223,10 @@ class StatsCollectorSpec extends AnyFunSuite {
     }
 
   test("plan shape: every aggregate is in whole-stage codegen, same width for every table") {
-    // a clone scopes the listener to this test's queries; it never
-    // broadcasts, so it takes the scans (the driver finish plans no
-    // aggregate)
-    val s = GraftBridge.cloneSession(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    // a session of its own scopes the listener to this test's queries;
+    // it never broadcasts, so it takes the scans (the driver finish plans
+    // no aggregate)
+    val s = graft.LocalSpark.session("spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val plans = mutable.ArrayBuffer.empty[SparkPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =

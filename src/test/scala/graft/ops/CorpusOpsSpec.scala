@@ -217,17 +217,17 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(s.conf.getAll == conf)
   }
 
-  test("connectedComponents: the rounds plan on one clone that follows the caller's conf") {
-    val s = graft.LocalSpark.session()
-    val key = "spark.sql.constraintPropagation.enabled"
-    val callerSetting = s.conf.get(key)
-    val first = Dedup.roundsSession(s)
-    assert(Dedup.roundsSession(s) eq first)
-    s.conf.set("spark.sql.shuffle.partitions", "3")
-    val next = Dedup.roundsSession(s)
-    assert(!(next eq first))
-    assert(next.conf.get("spark.sql.shuffle.partitions") == "3")
-    assert(next.conf.get(key) == "false" && s.conf.get(key) == callerSetting)
+  test("connectedComponents: the distributed finish runs on the caller's session and leaves its conf alone") {
+    val s = graft.LocalSpark.session("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    import s.implicits._
+    val conf = s.conf.getAll
+    val got = Dedup.connectedComponents(
+      (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b"), "id_a", "id_b",
+      (1L to 40L).toDF("id"), "id")
+    assert(Dedup.lastRounds > 0)
+    assert(got.sparkSession eq s)
+    assert(got.where(col("cluster_id") === 1L).count() == 40L)
+    assert(s.conf.getAll == conf)
   }
 
   test("connectedComponents: the distributed finish keeps only the blocks behind its result") {

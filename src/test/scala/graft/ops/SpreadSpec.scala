@@ -11,6 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SpreadSpec extends AnyFunSuite {
   private lazy val spark = graft.LocalSpark.session()
+  private val tables = Seq("region", "nation", "customer", "supplier", "part", "orders",
+    "lineitem", "documents", "embeddings", "events")
 
   private def deleteRec(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRec))
@@ -59,27 +61,30 @@ class SpreadSpec extends AnyFunSuite {
   }
 
   test("the metadata estimate equals Spark's own split count on every sf0.001 table") {
-    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
-        "documents", "embeddings", "events").foreach { t =>
+    tables.foreach { t =>
       val df = graft.Tables.load(spark, "/root/testdata/sf0.001", t)
       assert(GraftBridge.estimatedScanSplits(df) == Some(df.rdd.getNumPartitions.toLong), t)
     }
   }
 
-  test("file packing arithmetic follows FilePartition at parallelism 2") {
-    val (mb, open) = (1L << 20, 4L << 20)
-    def parts(files: Long*) = GraftBridge.filePartitionCount(files.map(_ -> true), 2, 128 * mb, open)
-    // one small file: the split size is the open cost, and the file is
-    // one piece in one partition (a (bytes + open cost) / split estimate
-    // reads 2 here)
-    assert(parts(100000L) == 1L)
-    // (10 MB + 4 MB) / 2 = 7 MB splits: pieces 7 and 3 MB, one partition each
-    assert(parts(10 * mb) == 2L)
-    // three 1 MB files, (3 × 5 MB) / 2 = 7.5 MB splits: the first two
-    // share a partition (1 + 4 + 1 ≤ 7.5), the third would pass it
-    assert(parts(mb, mb, mb) == 2L)
-    // an unsplittable file stays one piece however large
-    assert(GraftBridge.filePartitionCount(Seq((300 * mb) -> false), 2, 128 * mb, open) == 1L)
-    assert(parts() == 0L)
+  test("the estimate equals Spark's split count at parallelism 2, with and without spark.sql.files.maxPartitionNum") {
+    val leaf = "spark.sql.leafNodeDefaultParallelism" -> "2"
+    val cap = "spark.sql.files.maxPartitionNum" -> "3"
+    // 64 KiB splits and open cost cut the larger files into many pieces,
+    // so the cap has pieces to pack
+    val small = Seq("spark.sql.files.maxPartitionBytes" -> "65536",
+      "spark.sql.files.openCostInBytes" -> "65536")
+    val most = Seq(Seq(leaf), Seq(leaf, cap), leaf +: small, leaf +: cap +: small).map { conf =>
+      val s = graft.LocalSpark.session(conf: _*)
+      conf -> (for (sf <- Seq("sf0.001", "sf0.01"); t <- tables) yield {
+        val df = graft.Tables.load(s, s"/root/testdata/$sf", t)
+        val splits = df.rdd.getNumPartitions.toLong
+        assert(GraftBridge.estimatedScanSplits(df) == Some(splits), s"$sf/$t under $conf")
+        splits
+      }).max
+    }.toMap
+    // the cap binds: Spark re-packs the small splits into fewer, larger
+    // partitions (about the cap; its greedy packing may pass it by one)
+    assert(most(leaf +: small) > 3L && most(leaf +: cap +: small) < most(leaf +: small), most)
   }
 }

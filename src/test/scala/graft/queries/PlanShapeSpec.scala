@@ -135,11 +135,11 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(cachedSmallSide, "no join side of q72 reads the persisted orders frame")
   }
 
-  test("q49_dedup_clusters and q90_groupaware_split leave no RDD persisted") {
+  test("q49, q68, q84 and q90 leave no RDD persisted") {
     val s = graft.LocalSpark.session()
     val sc = s.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    Seq("q49_dedup_clusters", "q90_groupaware_split")
+    Seq("q49_dedup_clusters", "q68_cms_heavy_hitters", "q84_incremental_stats", "q90_groupaware_split")
       .foreach(name => SparkEntry.queries(name)(s, gate).count())
     val left = sc.getPersistentRDDs.keySet -- before
     assert(left.isEmpty, s"persisted RDDs left behind: ${left.toSeq.sorted.mkString(", ")}")

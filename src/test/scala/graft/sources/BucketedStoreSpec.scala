@@ -108,9 +108,9 @@ class BucketedStoreSpec extends AnyFunSuite {
     val before = probe().collect().map(_.toSeq).toSet
     assert(before.nonEmpty, "probe batch must collide with the index")
 
-    // the write's conf lives on a clone: the caller's session keeps its
-    // own value of the key, unset staying unset (getAll lists only set
-    // keys; getOption would report the default)
+    // the write runs under the caller's conf, the local shuffle reader
+    // at its default here, and writes none: unset stays unset (getAll
+    // lists only set keys; getOption would report the default)
     val lsrKey = "spark.sql.adaptive.localShuffleReader.enabled"
     assert(spark.conf.getAll.get(lsrKey).isEmpty)
     val written = BucketedStore.compactBucketed(spark, "lsh_cmp")
@@ -141,8 +141,8 @@ class BucketedStoreSpec extends AnyFunSuite {
       s"compacted index side shuffled:\n$idxSide")
 
     // a second compaction swaps the location back — still one file per
-    // bucket (with the caller's session set to the value that would
-    // scatter the write, and keeping it) and the probe still answers
+    // bucket with the caller's local shuffle reader explicitly on, which
+    // the caller keeps — and the probe still answers
     spark.conf.set(lsrKey, "true")
     try {
       assert(BucketedStore.compactBucketed(spark, "lsh_cmp") == 4)
