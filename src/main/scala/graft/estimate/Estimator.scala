@@ -253,7 +253,10 @@ object Estimator {
   }
 
   /** log2-bucket metrics (metrics.py:9-27): accuracy on rounded buckets,
-    * MAE in log2 units, macro-F1 over buckets.
+    * MAE in log2 units, macro-F1 over buckets. All three are taken in the
+    * bucket space: the MAE clamps prediction and label to
+    * [minBucket, 8] first, as the buckets clamp them, so a prediction of
+    * bucket 0 for a 0.05 s query costs nothing at `minBucket = 0`.
     *
     * `minBucket` sets the floor of the bucket space. The default -3
     * keeps sub-second runtimes separable (useful diagnostically at
@@ -268,9 +271,10 @@ object Estimator {
                minBucket: Int = -3): (Double, Double, Double) = {
     def bucket(x: Double): Int =
       math.max(minBucket, math.min(8, math.floor(x + 0.5).toInt))
+    def clamp(x: Double): Double = math.max(minBucket.toDouble, math.min(8.0, x))
     val pairs = pred.map { case (p, l) => (bucket(p), bucket(l)) }
     val acc = pairs.count(p => p._1 == p._2).toDouble / math.max(1, pairs.size)
-    val mae = pred.map { case (p, l) => math.abs(p - l) }.sum / math.max(1, pred.size)
+    val mae = pred.map { case (p, l) => math.abs(clamp(p) - clamp(l)) }.sum / math.max(1, pred.size)
     val labels = pairs.flatMap(p => Seq(p._1, p._2)).distinct
     val f1s = labels.map { b =>
       val tp = pairs.count(p => p._1 == b && p._2 == b).toDouble

@@ -86,9 +86,6 @@ object ModelIo {
         "joinFeats" -> f.p.cfg.joinFeats, "hidden" -> f.p.cfg.hidden),
       Seq("minLog" -> f.minLog, "maxLog" -> f.maxLog), f.p.w)
 
-  def loadMscn(path: String): Mscn.Fitted = loadMscnFromJson(
-    java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
-
   def loadMscnFromJson(json: String): Mscn.Fitted = {
     val r = readDocText(json, "mscn")
     val cfg = Mscn.Config(r.get("tableFeats").asInt(), r.get("predFeats").asInt(),
@@ -105,9 +102,6 @@ object ModelIo {
     writeDoc(path, "neonet",
       Seq("inputDim" -> f.p.cfg.inputDim, "h1" -> f.p.cfg.h1,
         "h2" -> f.p.cfg.h2, "h3" -> f.p.cfg.h3), Nil, f.p.w)
-
-  def loadNeo(path: String): NeoNet.Fitted = loadNeoFromJson(
-    java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
 
   def loadNeoFromJson(json: String): NeoNet.Fitted = {
     val r = readDocText(json, "neonet")
@@ -126,12 +120,6 @@ object ModelIo {
     writeDoc(path, "gru",
       Seq("inputDim" -> f.p.cfg.inputDim, "hidden" -> f.p.cfg.hidden,
         "classes" -> f.p.cfg.classes), Nil, f.p.w, normArrays(norm))
-
-  def loadGru(path: String): Gru.Fitted = loadGruNorm(path)._1
-
-  def loadGruNorm(path: String): (Gru.Fitted, Option[(Array[Double], Array[Double])]) =
-    loadGruNormFromJson(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
 
   /** Parse a GRU checkpoint from its JSON TEXT — the executor-side
     * entry: [[Scoring.scoreWorkload]] broadcasts the checkpoint as a
@@ -152,7 +140,8 @@ object ModelIo {
   /** `norm`: the train-split per-dimension (mean, std) the sequences
     * were z-scored with — REQUIRED for a checkpoint meant to predict in
     * a later session (weights fitted on z-scored inputs are garbage on
-    * raw features; [[loadGru4Norm]] returns them alongside the model).
+    * raw features; [[loadGru4NormFromJson]] returns them alongside the
+    * model).
     */
   def saveGru4(path: String, f: Gru4.Fitted,
                norm: Option[(Array[Double], Array[Double])] = None): Unit =
@@ -160,18 +149,11 @@ object ModelIo {
       Seq("inputDim" -> f.p.cfg.inputDim, "hidden" -> f.p.cfg.hidden,
         "headHidden" -> f.p.cfg.headHidden), Nil, f.p.w, normArrays(norm))
 
-  def loadGru4(path: String): Gru4.Fitted = loadGru4Norm(path)._1
-
   /** Model plus the persisted z-score constants (None on a checkpoint
-    * saved without them). Callers predicting in a fresh session must
-    * apply (x − mean) / std per dimension before the forward pass.
+    * saved without them) from the checkpoint's JSON text. Callers
+    * predicting in a fresh session must apply (x − mean) / std per
+    * dimension before the forward pass.
     */
-  def loadGru4Norm(path: String): (Gru4.Fitted, Option[(Array[Double], Array[Double])]) =
-    loadGru4NormFromJson(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
-
-  /** JSON-text variant for executor-side parsing of a broadcast
-    * checkpoint ([[Scoring.scoreWorkloadV20]]). */
   def loadGru4NormFromJson(json: String)
       : (Gru4.Fitted, Option[(Array[Double], Array[Double])]) = {
     val r = readDocText(json, "gru4")
@@ -191,12 +173,6 @@ object ModelIo {
       Seq("inputDim" -> f.p.cfg.inputDim, "hidden" -> f.p.cfg.hidden),
       Nil, f.p.w, normArrays(norm))
 
-  def loadTreeLstm(path: String): TreeLstm.Fitted = loadTreeLstmNorm(path)._1
-
-  def loadTreeLstmNorm(path: String): (TreeLstm.Fitted, Option[(Array[Double], Array[Double])]) =
-    loadTreeLstmNormFromJson(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
-
   def loadTreeLstmNormFromJson(json: String)
       : (TreeLstm.Fitted, Option[(Array[Double], Array[Double])]) = {
     val r = readDocText(json, "treelstm")
@@ -214,12 +190,6 @@ object ModelIo {
     writeDoc(path, "relcnn",
       Seq("inputDim" -> f.p.cfg.inputDim, "filters" -> f.p.cfg.filters,
         "headHidden" -> f.p.cfg.headHidden), Nil, f.p.w, normArrays(norm))
-
-  def loadRelCnn(path: String): RelCnn.Fitted = loadRelCnnNorm(path)._1
-
-  def loadRelCnnNorm(path: String): (RelCnn.Fitted, Option[(Array[Double], Array[Double])]) =
-    loadRelCnnNormFromJson(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
 
   def loadRelCnnNormFromJson(json: String)
       : (RelCnn.Fitted, Option[(Array[Double], Array[Double])]) = {

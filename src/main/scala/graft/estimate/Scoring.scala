@@ -131,20 +131,4 @@ object Scoring {
         when(isnan(col("log2_seconds")), lit(Double.NaN))
           .otherwise(pow(lit(2.0), col("log2_seconds"))).as("est_seconds"))
   }
-
-  /** Score `workload`'s `sqlCol` with a persisted v20 four-traversal
-    * GRU REGRESSOR ([[ModelIo.saveGru4]] — the reference's flagship
-    * model shape, gerelt/v20/model.py:94-122): continuous
-    * `log2_seconds` plus its exponentiation `est_seconds`, over the
-    * parent-linked tree encoding. Same broadcast-text /
-    * parse-once-per-partition / shuffle-free shape as
-    * [[scoreWorkload]]; unbindable SQL keeps its row with NaNs.
-    */
-  def scoreWorkloadV20(spark: SparkSession, workload: DataFrame, sqlCol: String,
-                       modelJson: String, statsJson: String): DataFrame = {
-    require(ModelIo.kindOf(modelJson) == "gru4",
-      s"scoreWorkloadV20 serves gru4 checkpoints, " +
-        s"got '${ModelIo.kindOf(modelJson)}'")
-    scoreWorkloadAny(spark, workload, sqlCol, modelJson, statsJson)
-  }
 }

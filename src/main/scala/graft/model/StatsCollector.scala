@@ -139,14 +139,17 @@ object StatsCollector {
     * 2 as decimal-exact sums of range-normalized deviations. Domain
     * bound: |value| < 10^32 (decimal(38,6)) — holds for every measure
     * the model covers (prices, counts, epoch seconds, string lengths).
-    * The same cast sets a LOWER precision cliff: values quantize at
+    * Outside it the cast is a `try_cast`: a value beyond decimal(38,6)
+    * is skipped by the mean as ±Infinity and NaN are, and a mean beyond
+    * avg's decimal(38,10) result reads NaN (`try_avg`), instead of
+    * failing the table under ANSI mode. The same cast sets a LOWER precision cliff: values quantize at
     * 1e-6 absolute before summation, so a measure whose signal lives
     * below that (per-token probabilities, sub-micro rates) would mean
     * to 0 silently — rescale such columns before feeding the model.
     */
   private def numAggs(m: String): Seq[Column] = Seq(
     min(m).as(s"${m}_min"), max(m).as(s"${m}_max"),
-    avg(col(m).cast(MeanType)).cast("double").as(s"${m}_mean"))
+    try_avg(col(m).try_cast(MeanType)).cast("double").as(s"${m}_mean"))
 
   /** Scan-2 aggregates for one measure: exact decimal sums of the first
     * four powers of u = (x - mean)/width. |u| <= 1, so the quartic can
@@ -159,7 +162,7 @@ object StatsCollector {
     val u = (col(m) - col(s"${m}_mean")) / col(s"${m}_width")
     val u2 = u * u
     Seq("s1" -> u, "s2" -> u2, "s3" -> (u2 * u), "s4" -> (u2 * u2))
-      .map { case (n, c) => sum(c.cast(MomentType)).as(s"${m}__$n") }
+      .map { case (n, c) => sum(c.try_cast(MomentType)).as(s"${m}__$n") }
   }
 
   /** Driver-side combine of the scan-2 sums into (var_samp, skewness,
@@ -423,8 +426,8 @@ object StatsCollector {
     * Spark's aggregates compute them: nulls skipped as `count`, `avg` and
     * `sum` skip them; distinct keys compared after Spark's grouping
     * normalization (one NaN, -0.0 as 0.0); doubles cast to decimal by
-    * Spark's own cast (from `Double.toString`, HALF_UP; null for NaN and
-    * infinities); the moment images in `momentAggs`' operation order; and
+    * Spark's own `try_cast` (from `Double.toString`, HALF_UP; null for
+    * NaN, infinities and values beyond the decimal); the moment images in `momentAggs`' operation order; and
     * doubles compared as Spark's comparisons compare them.
     */
   private final class Fold(spark: SparkSession, ncols: Int, parts: Seq[Array[Byte]]) {
@@ -483,20 +486,20 @@ object StatsCollector {
     }
 
     def scan1: Map[Int, Scan1] = {
-      val toMean = GraftBridge.doubleCast(spark, MeanType)
+      val toMean = GraftBridge.doubleTryCast(spark, MeanType)
       (0 until ncols).map { cid =>
         cid -> Scan1(rows(cid), nonNull(cid), keys(cid).size.toLong, measures(cid).toIndexedSeq.map { f =>
           if (!f.seen) NoExtent else {
             val Seq((sum, n)) = exactSums(f, toMean, 1)(x => Seq(x))
             Extent(f.min, f.max,
-              GraftBridge.decimalAvg(spark, sum, n, MeanType).fold(Double.NaN)(_.toDouble))
+              GraftBridge.decimalTryAvg(sum, n, MeanType).fold(Double.NaN)(_.toDouble))
           }
         })
       }.toMap
     }
 
     def scan2(params: Map[Int, Params]): Map[Int, Scan2] = {
-      val toMoment = GraftBridge.doubleCast(spark, MomentType)
+      val toMoment = GraftBridge.doubleTryCast(spark, MomentType)
       params.map { case (cid, p) =>
         val sums = Measures.indices.map { m =>
           p.moments(m).fold(IndexedSeq.fill(4)(Double.NaN)) { case (mean, width) =>

@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.BucketedStore
+
 import PortableHash.hash60
 
 /** Deduplication operators for large-scale text corpora: exact, MinHash+LSH,
@@ -618,45 +620,26 @@ object Dedup {
     * ingestion. Build once over the existing corpus; every arriving
     * batch probes it via [[incrementalLshCandidates]] (and is folded in
     * with [[appendToLshIndex]] once accepted) without the index ever
-    * being re-read into a shuffle. The signature parameters are stored
-    * as table properties and validated at probe/append time — a
-    * mismatched probe would silently find nothing. `numBuckets` sizes
-    * downstream probe parallelism (at 100 TB: pick so one bucket fits
-    * an executor).
+    * being re-read into a shuffle. The signature parameters are stamped
+    * as table properties and checked at probe/append time — a
+    * mismatched probe computes band keys over different signature
+    * slices and silently finds nothing, which in a dedup pipeline means
+    * every duplicate is silently ingested. The write, the check and the
+    * append are [[graft.sources.BucketedStore]]'s index contract.
+    * `numBuckets` sizes downstream probe parallelism (at 100 TB: pick so
+    * one bucket fits an executor).
     */
   def buildLshIndex(docs: DataFrame, idCol: String, textCol: String,
                     k: Int, shingleN: Int, bands: Int,
-                    table: String, path: String, numBuckets: Int): Unit = {
-    graft.sources.BucketedStore.writeBucketed(
-      bandRowsWithKey(docs, idCol, textCol, k, shingleN, bands), table, "bkey", numBuckets, path)
-    docs.sparkSession.sql(
-      s"ALTER TABLE $table SET TBLPROPERTIES(" +
-        s"'graft.lsh.k'='$k','graft.lsh.shingleN'='$shingleN'," +
-        s"'graft.lsh.bands'='$bands','graft.lsh.idCol'='$idCol'," +
-        s"'graft.lsh.buckets'='$numBuckets')")
-  }
+                    table: String, path: String, numBuckets: Int): Unit =
+    BucketedStore.writeBucketed(
+      bandRowsWithKey(docs, idCol, textCol, k, shingleN, bands), table, "bkey", numBuckets, path,
+      lshParams(idCol, k, shingleN, bands))
 
-  /** Assert the caller's signature parameters match what the index was
-    * built with — a mismatch computes band keys over different
-    * signature slices and the probe silently returns nothing, which in
-    * a dedup pipeline means every duplicate is silently ingested.
-    */
-  private def validateIndexParams(spark: org.apache.spark.sql.SparkSession,
-                                  indexTable: String, idCol: String,
-                                  k: Int, shingleN: Int, bands: Int): Map[String, String] = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $indexTable").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val want = Map("graft.lsh.k" -> k.toString, "graft.lsh.shingleN" -> shingleN.toString,
+  /** The build parameters an LSH index carries as table properties. */
+  private def lshParams(idCol: String, k: Int, shingleN: Int, bands: Int): Map[String, String] =
+    Map("graft.lsh.k" -> k.toString, "graft.lsh.shingleN" -> shingleN.toString,
       "graft.lsh.bands" -> bands.toString, "graft.lsh.idCol" -> idCol)
-    // a MISSING property is a failure too: a table not built by
-    // buildLshIndex must not silently pass as "matching"
-    val bad = want.filter { case (p, v) => !props.get(p).contains(v) }
-    require(bad.isEmpty,
-      s"index $indexTable was built with different parameters: " +
-        bad.map { case (p, v) => s"$p: caller=$v index=${props.getOrElse(p, "<missing>")}" }
-          .mkString("; "))
-    props
-  }
 
   /** Fold an ACCEPTED batch's band rows into the index (same bucket
     * layout, append mode) so later batches dedup against it too —
@@ -665,17 +648,10 @@ object Dedup {
     */
   def appendToLshIndex(newDocs: DataFrame, idCol: String, textCol: String,
                        k: Int, shingleN: Int, bands: Int, indexTable: String): Unit = {
-    val spark = newDocs.sparkSession
-    val props = validateIndexParams(spark, indexTable, idCol, k, shingleN, bands)
-    // the append writer must re-declare the table's bucket spec or Spark
-    // rejects it ("Specified bucketing does not match")
-    val numBuckets = props.get("graft.lsh.buckets").map(_.toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$indexTable lacks graft.lsh.buckets — not built by buildLshIndex?"))
-    bandRowsWithKey(newDocs, idCol, textCol, k, shingleN, bands)
-      .write.format("parquet")
-      .bucketBy(numBuckets, "bkey").sortBy("bkey")
-      .mode("append").saveAsTable(indexTable)
+    BucketedStore.requireProperties(newDocs.sparkSession, indexTable,
+      lshParams(idCol, k, shingleN, bands))
+    BucketedStore.appendBucketed(
+      bandRowsWithKey(newDocs, idCol, textCol, k, shingleN, bands), indexTable)
   }
 
   /** Incremental dedup: candidates between a NEW batch and the existing
@@ -689,7 +665,8 @@ object Dedup {
   def incrementalLshCandidates(newDocs: DataFrame, idCol: String, textCol: String,
                                k: Int, shingleN: Int, bands: Int,
                                indexTable: String): DataFrame = {
-    validateIndexParams(newDocs.sparkSession, indexTable, idCol, k, shingleN, bands)
+    BucketedStore.requireProperties(newDocs.sparkSession, indexTable,
+      lshParams(idCol, k, shingleN, bands))
     val bandRows = bandRowsWithKey(newDocs, idCol, textCol, k, shingleN, bands)
     val newBands = bandRows.select(col("bkey"), col(idCol).as("id_new"))
     val idx = newDocs.sparkSession.table(indexTable)

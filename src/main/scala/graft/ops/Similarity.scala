@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.sources.BucketedStore
 
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -95,24 +98,44 @@ object Similarity {
   def withNorm2(df: DataFrame, vecCol: String): DataFrame =
     spread(df).withColumn("norm2", dotDecimal(col(vecCol), col(vecCol)))
 
+  /** One side of a pair join over a normed frame: the `lead` columns,
+    * then id, vector and squared norm renamed with the side's suffix
+    * (`a` for queries, `b` for the corpus).
+    */
+  private def side(df: DataFrame, idCol: String, vecCol: String, suffix: String,
+                   lead: Column*): DataFrame =
+    df.select(lead ++ Seq(col(idCol).as(s"id_$suffix"), col(vecCol).as(s"vec_$suffix"),
+      col("norm2").as(s"norm2_$suffix")): _*)
+
+  /** The last step of every top-k search here: each query's (`id_a`)
+    * candidates ranked by `score`, ties to the smaller `id_b`, and the
+    * first `k` kept as (id_a, id_b, `out`, rank).
+    */
+  private def rankTopK(scored: DataFrame, score: Column, k: Int, out: Column): DataFrame = {
+    val w = Window.partitionBy(col("id_a")).orderBy(score, col("id_b"))
+    scored.withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select(col("id_a"), col("id_b"), out, col("rank"))
+  }
+
+  /** Exact-cosine top-k over candidate pairs of a query side (`a`) and a
+    * corpus side (`b`): self pairs dropped, highest cosine first,
+    * reported at 6 decimals as `cos_sim`.
+    */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    rankTopK(pairs.where(col("id_a") =!= col("id_b"))
+        .withColumn("cos", cosine(col("vec_a"), col("vec_b"), col("norm2_a"), col("norm2_b"))),
+      col("cos").desc, k, round(col("cos"), 6).as("cos_sim"))
+
   /** Exact top-k cosine neighbors for the query rows selected by
     * `queryPred`. The query side is tiny → broadcast; the corpus is
     * scanned once; per-query ranking is a window over k·|queries| rows.
     */
   def bruteForceTopK(df: DataFrame, idCol: String, vecCol: String,
                      queryPred: Column, k: Int): DataFrame = {
-    val corpus = withNorm2(df, vecCol)
-      .select(col(idCol).as("id_b"), col(vecCol).as("vec_b"), col("norm2").as("norm2_b"))
-    val queries = withNorm2(df.where(queryPred), vecCol)
-      .select(col(idCol).as("id_a"), col(vecCol).as("vec_a"), col("norm2").as("norm2_a"))
-    val scored = corpus.crossJoin(broadcast(queries))
-      .where(col("id_a") =!= col("id_b"))
-      .withColumn("cos", cosine(col("vec_a"), col("vec_b"), col("norm2_a"), col("norm2_b")))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("id_a")).orderBy(col("cos").desc, col("id_b"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"), col("rank"))
+    val corpus = side(withNorm2(df, vecCol), idCol, vecCol, "b")
+    val queries = side(withNorm2(df.where(queryPred), vecCol), idCol, vecCol, "a")
+    cosineTopK(corpus.crossJoin(broadcast(queries)), k)
   }
 
   /** All pairs with cosine >= threshold (exact). Quadratic — intended for
@@ -122,9 +145,7 @@ object Similarity {
   def cosinePairs(df: DataFrame, idCol: String, vecCol: String,
                   threshold: Double): DataFrame = {
     val n = withNorm2(df, vecCol)
-    val a = n.select(col(idCol).as("id_a"), col(vecCol).as("vec_a"), col("norm2").as("norm2_a"))
-    val b = n.select(col(idCol).as("id_b"), col(vecCol).as("vec_b"), col("norm2").as("norm2_b"))
-    a.crossJoin(b).where(col("id_a") < col("id_b"))
+    side(n, idCol, vecCol, "a").crossJoin(side(n, idCol, vecCol, "b")).where(col("id_a") < col("id_b"))
       .withColumn("cos", cosine(col("vec_a"), col("vec_b"), col("norm2_a"), col("norm2_b")))
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"))
@@ -198,11 +219,9 @@ object Similarity {
             else df.sparkSession.sparkContext.defaultParallelism
     val bucketed = withNorm2(df, vecCol)
       .withColumn("bucket", srpBucket(col(vecCol), planes, dims))
-    val a = bucketed.select(col("bucket"), col(idCol).as("id_a"),
-        col(vecCol).as("vec_a"), col("norm2").as("norm2_a"))
+    val a = side(bucketed, idCol, vecCol, "a", col("bucket"))
       .withColumn("salt", PortableHash.hash60(concat(lit("salt:"), col("id_a").cast("string"))) % S)
-    val b = bucketed.select(col("bucket"), col(idCol).as("id_b"),
-        col(vecCol).as("vec_b"), col("norm2").as("norm2_b"))
+    val b = side(bucketed, idCol, vecCol, "b", col("bucket"))
       .withColumn("salt", explode(sequence(lit(0L), lit(S - 1L))))
     a.join(b.hint("shuffle_merge"), Seq("bucket", "salt"))
       .where(col("id_a") < col("id_b"))
@@ -217,20 +236,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"))
   }
 
-  /** IVF cell assignment: every vector goes to its nearest centroid
-    * (highest exact cosine; ties to the lowest centroid id). Centroids
-    * are the rows selected by `centroidPred` — a deterministic rule
-    * rather than trained k-means, so the oracle can recompute the exact
-    * same cells; the Voronoi/candidate mechanics are identical either
-    * way, and a trained codebook can be swapped in via the same
-    * predicate-over-a-centroid-table shape.
-    *
-    * Scale design: centroids broadcast (C ≪ n), the n×C scoring stays
-    * map-side and projects to slim (id, cell) rows BEFORE any shuffle
-    * (vectors never fan out C-fold), the argmax is a map-side-combined
-    * `max(struct)` aggregate, and the join back to the corpus is one
-    * co-partitioned hash join on the id.
-    */
   /** Normed corpus PERSISTED under its ORIGINAL column names: the IVF
     * ops read it from several branches (centroid set, query set,
     * assignment scan, rerank side), and without the persist each branch
@@ -248,10 +253,31 @@ object Similarity {
     withNorm2(df, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  private[graft] def assignCells(corpus: DataFrame, idCol: String, vecCol: String,
-                                 centroidPred: Column): DataFrame = {
-    val cents = corpus.where(centroidPred)
+  /** The IVF codebook: the rows `centroidPred` selects from a normed
+    * corpus, as (cent_id, cvec, cnorm2).
+    */
+  private def centroids(corpus: DataFrame, idCol: String, vecCol: String,
+                        centroidPred: Column): DataFrame =
+    corpus.where(centroidPred)
       .select(col(idCol).as("cent_id"), col(vecCol).as("cvec"), col("norm2").as("cnorm2"))
+
+  /** IVF cell assignment: every vector of a normed corpus goes to its
+    * nearest centroid of `cents` (highest exact cosine; ties to the
+    * lowest centroid id). Centroids are rows selected by a predicate
+    * ([[centroids]]) — a deterministic rule rather than trained k-means,
+    * so the oracle can recompute the exact same cells; the
+    * Voronoi/candidate mechanics are identical either way, and a trained
+    * codebook can be swapped in via the same predicate-over-a-centroid-
+    * table shape. Returns (id, vec, norm2, cell).
+    *
+    * Scale design: centroids broadcast (C ≪ n), the n×C scoring stays
+    * map-side and projects to slim (id, cell) rows BEFORE any shuffle
+    * (vectors never fan out C-fold), the argmax is a map-side-combined
+    * `max(struct)` aggregate, and the join back to the corpus is one
+    * co-partitioned hash join on the id.
+    */
+  private[graft] def assignCells(corpus: DataFrame, idCol: String, vecCol: String,
+                                 cents: DataFrame): DataFrame = {
     val scored = corpus.crossJoin(broadcast(cents))
       .select(col(idCol).as("id"),
         struct(
@@ -265,8 +291,24 @@ object Similarity {
   }
 
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
-                centroidPred: Column): DataFrame =
-    assignCells(ivfCorpus(df, vecCol), idCol, vecCol, centroidPred)
+                centroidPred: Column): DataFrame = {
+    val corpus = ivfCorpus(df, vecCol)
+    assignCells(corpus, idCol, vecCol, centroids(corpus, idCol, vecCol, centroidPred))
+  }
+
+  /** The IVF probe: each query (a `side` "a" frame) scores the broadcast
+    * codebook `cents` by exact cosine and keeps its `nprobe` nearest
+    * cells (ties to the lower centroid id), as (cell, id_a, vec_a,
+    * norm2_a).
+    */
+  private def probeCells(queries: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
+    val w = Window.partitionBy(col("id_a")).orderBy(col("qcos").desc, col("cent_id"))
+    queries.crossJoin(broadcast(cents))
+      .withColumn("qcos", cosine(col("vec_a"), col("cvec"), col("norm2_a"), col("cnorm2")))
+      .withColumn("prank", row_number().over(w))
+      .where(col("prank") <= nprobe)
+      .select(col("cent_id").as("cell"), col("id_a"), col("vec_a"), col("norm2_a"))
+  }
 
   /** IVF ANN top-k: queries probe their `nprobe` nearest cells and
     * exact-rerank only the vectors assigned there — the
@@ -282,119 +324,87 @@ object Similarity {
     // predicates filter the cached corpus under its original names so
     // every branch is a cache hit
     val corpus0 = ivfCorpus(df, vecCol)
+    val cents = centroids(corpus0, idCol, vecCol, centroidPred)
     // persist the assignment too: the crossJoin scoring pass over every
     // (vector, centroid) pair is the expensive stage, and without this
     // it re-runs on every action over the result (bench round 6 measured
     // q43 run-to-run spread 9.2× from exactly that recomputation)
-    val assigned = assignCells(corpus0, idCol, vecCol, centroidPred)
-      .select(col("cell"), col("id").as("id_b"),
-        col("vec").as("vec_b"), col("norm2").as("norm2_b"))
+    val assigned = side(assignCells(corpus0, idCol, vecCol, cents), "id", "vec", "b", col("cell"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    import org.apache.spark.sql.expressions.Window
-    // rank centroids per query; keep the nprobe nearest as probe cells
-    val qscored = corpus0.where(queryPred)
-      .select(col(idCol).as("id_a"), col(vecCol).as("vec_a"), col("norm2").as("norm2_a"))
-      .crossJoin(broadcast(
-        corpus0.where(centroidPred)
-          .select(col(idCol).as("cent_id"), col(vecCol).as("cvec"), col("norm2").as("cnorm2"))))
-      .withColumn("qcos", cosine(col("vec_a"), col("cvec"), col("norm2_a"), col("cnorm2")))
-    val wq = Window.partitionBy(col("id_a")).orderBy(col("qcos").desc, col("cent_id"))
-    val probes = qscored.withColumn("prank", row_number().over(wq))
-      .where(col("prank") <= nprobe)
-      .select(col("cent_id").as("cell"), col("id_a"), col("vec_a"), col("norm2_a"))
-    val scored = assigned.join(broadcast(probes), "cell")
-      .where(col("id_a") =!= col("id_b"))
-      .withColumn("cos", cosine(col("vec_a"), col("vec_b"), col("norm2_a"), col("norm2_b")))
-    val w = Window.partitionBy(col("id_a")).orderBy(col("cos").desc, col("id_b"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"), col("rank"))
+    val probes = probeCells(side(corpus0.where(queryPred), idCol, vecCol, "a"), cents, nprobe)
+    cosineTopK(assigned.join(broadcast(probes), "cell"), k)
   }
+
+  /** The vector lengths of `df`'s `vecCol`: "d" when every vector has d
+    * components, "lo..hi" when they differ, None when `df` is empty.
+    */
+  private def vectorDims(df: DataFrame, vecCol: String): Option[String] = {
+    val r = df.agg(min(size(col(vecCol))), max(size(col(vecCol)))).head
+    if (r.isNullAt(0)) None
+    else Some(if (r.getInt(0) == r.getInt(1)) r.getInt(0).toString
+              else s"${r.getInt(0)}..${r.getInt(1)}")
+  }
+
+  /** The build parameters an IVF index carries as table properties: the
+    * id column and the vector length (the decimal dot kernel truncates to
+    * the SHORTER operand, so a wrong-length probe or append would
+    * silently compute garbage cosines instead of failing).
+    */
+  private def ivfParams(idCol: String, dims: String): Map[String, String] =
+    Map("graft.ivf.idCol" -> idCol, "graft.ivf.dims" -> dims)
 
   /** Persist the IVF index for repeated serving: the cell assignments
     * land as a parquet table BUCKETED on `cell` (the probe join key)
-    * with the centroid codebook as a small side table — the ANN
-    * counterpart of [[graft.ops.Dedup.buildLshIndex]]. A later
-    * [[ivfIndexTopK]] probes it without recomputing assignments and,
-    * because the cell side is pre-bucketed, without shuffling the
-    * corpus: only the (small) query batch moves. At 100 TB the index
-    * build is the one expensive pass; every subsequent query batch
-    * costs O(batch × nprobe × cell size).
+    * with the centroid codebook as a small side table, under
+    * [[graft.sources.BucketedStore]]'s index contract (the build
+    * parameters stamped as table properties, checked by every probe and
+    * append). A later [[ivfIndexTopK]] probes it without recomputing
+    * assignments and, because the cell side is pre-bucketed, without
+    * shuffling the corpus: only the (small) query batch moves. At
+    * 100 TB the index build is the one expensive pass; every subsequent
+    * query batch costs O(batch × nprobe × cell size).
     */
   def buildIvfIndex(df: DataFrame, idCol: String, vecCol: String,
                     centroidPred: Column, table: String, path: String,
                     numBuckets: Int): Unit = {
-    val spark = df.sparkSession
     val corpus = ivfCorpus(df, vecCol)
-    // pin the vector dimensionality in the table properties: the decimal
-    // dot kernel truncates to the SHORTER operand, so a wrong-dims probe
-    // or append would silently compute garbage cosines instead of failing
-    val dims = corpus.agg(
-        min(size(col(vecCol))).as("mn"), max(size(col(vecCol))).as("mx"))
-      .head match {
-        case r if r.isNullAt(0) => throw new IllegalArgumentException(
-          s"empty corpus: nothing to index into $table")
-        case r if r.getInt(0) == r.getInt(1) => r.getInt(0)
-        case r => throw new IllegalArgumentException(
-          s"mixed vector dims in corpus: ${r.getInt(0)}..${r.getInt(1)}")
-      }
-    corpus.where(centroidPred)
-      .select(col(idCol).as("cent_id"), col(vecCol).as("cvec"), col("norm2").as("cnorm2"))
-      .write.mode("overwrite").format("parquet")
+    val dims = vectorDims(corpus, vecCol).getOrElse(throw new IllegalArgumentException(
+      s"empty corpus: nothing to index into $table"))
+    require(!dims.contains(".."), s"mixed vector dims in corpus: $dims")
+    val cents = centroids(corpus, idCol, vecCol, centroidPred)
+    cents.write.mode("overwrite").format("parquet")
       .option("path", s"$path/centroids").saveAsTable(s"${table}_centroids")
-    graft.sources.BucketedStore.writeBucketed(
-      assignCells(corpus, idCol, vecCol, centroidPred), table, "cell",
-      numBuckets, s"$path/cells")
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES(" +
-      s"'graft.ivf.idCol'='$idCol','graft.ivf.buckets'='$numBuckets'," +
-      s"'graft.ivf.dims'='$dims')")
+    BucketedStore.writeBucketed(assignCells(corpus, idCol, vecCol, cents), table, "cell",
+      numBuckets, s"$path/cells", ivfParams(idCol, dims))
     corpus.unpersist()
     ()
   }
 
-  /** Shared probe/append validation against a [[buildIvfIndex]] table:
-    * the id column and the batch's vector dimensionality must match the
-    * build (a missing property fails too — a table not built by
-    * buildIvfIndex must not serve). Returns the parsed properties.
-    * Mirrors [[graft.ops.Dedup]]'s validateIndexParams.
+  /** Check a probe or append batch against a [[buildIvfIndex]] table:
+    * the batch must hold vectors, and its id column and vector length
+    * must be the build's ([[BucketedStore.requireProperties]]).
     */
-  private def validateIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
-                               indexTable: String): Map[String, String] = {
-    val spark = batch.sparkSession
-    val props = spark.sql(s"SHOW TBLPROPERTIES $indexTable").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    require(props.get("graft.ivf.idCol").contains(idCol),
-      s"index $indexTable: graft.ivf.idCol=${props.getOrElse("graft.ivf.idCol", "<missing>")}, caller=$idCol")
-    val dims = props.get("graft.ivf.dims").map(_.toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$indexTable lacks graft.ivf.dims — not built by buildIvfIndex?"))
-    val batchDims = batch.agg(
-      min(size(col(vecCol))).as("mn"), max(size(col(vecCol))).as("mx")).head
-    require(!batchDims.isNullAt(0),
-      s"empty batch: no vectors to validate against $indexTable")
-    require(batchDims.getInt(0) == dims && batchDims.getInt(1) == dims,
-      s"vector dims ${batchDims.getInt(0)}..${batchDims.getInt(1)} don't match " +
-        s"index $indexTable dims=$dims (the dot kernel would silently truncate)")
-    props
+  private def requireIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
+                              indexTable: String): Unit = {
+    val dims = vectorDims(batch, vecCol).getOrElse(throw new IllegalArgumentException(
+      s"empty batch: no vectors to validate against $indexTable"))
+    BucketedStore.requireProperties(batch.sparkSession, indexTable, ivfParams(idCol, dims))
   }
 
   /** Fold a NEW vector batch into a persisted [[buildIvfIndex]] table:
     * each vector joins the cell of its nearest stored centroid (the
     * codebook is NOT re-fit — same quantizer, so existing cells stay
-    * valid) and appends under the same bucket layout. The ingestion
-    * counterpart of [[graft.ops.Dedup.appendToLshIndex]]: index growth
-    * costs O(batch), never a corpus rewrite. Re-fit the codebook with
-    * [[kmeansStep]] + a rebuild when drift warrants it.
+    * valid) and appends under the table's bucket layout
+    * ([[BucketedStore.appendBucketed]]): index growth costs O(batch),
+    * never a corpus rewrite. Re-fit the codebook with [[kmeansStep]] + a
+    * rebuild when drift warrants it.
     */
   def appendToIvfIndex(newVecs: DataFrame, idCol: String, vecCol: String,
                        indexTable: String): Unit = {
-    val props = validateIvfIndex(newVecs, idCol, vecCol, indexTable)
-    val numBuckets = props.get("graft.ivf.buckets").map(_.toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$indexTable lacks graft.ivf.buckets — not built by buildIvfIndex?"))
-    // the per-id groupBy below would SILENTLY collapse duplicate ids
-    // (keeping one arbitrary vector); a batch with duplicates is a
-    // caller bug — fail loudly instead of losing vectors
+    val spark = newVecs.sparkSession
+    requireIvfIndex(newVecs, idCol, vecCol, indexTable)
+    // the index stores one row per id: a batch with duplicate ids is a
+    // caller bug — fail loudly instead of storing two rows per id
     val idCounts = newVecs.agg(
       count(lit(1)).as("n"), count_distinct(col(idCol)).as("nd")).head
     require(idCounts.getLong(0) == idCounts.getLong(1),
@@ -405,28 +415,13 @@ object Similarity {
     // would serve both. Semi-join the (small) batch against the index —
     // the index side streams through its scan, nothing shuffles in full
     val preexisting = newVecs.select(col(idCol).as("id"))
-      .join(newVecs.sparkSession.table(indexTable).select(col("id")), Seq("id"), "left_semi")
+      .join(spark.table(indexTable).select(col("id")), Seq("id"), "left_semi")
       .count()
     require(preexisting == 0L,
       s"$preexisting batch ids already present in $indexTable — the index " +
         "stores one row per id; subtract them or rebuild the index")
-    val cents = broadcast(newVecs.sparkSession.table(s"${indexTable}_centroids"))
-    val scored = withNorm2(newVecs, vecCol)
-      .select(col(idCol).as("id"), col(vecCol).as("vec"), col("norm2"))
-      .crossJoin(cents)
-      .select(col("id"), col("vec"), col("norm2"),
-        struct(
-          cosine(col("vec"), col("cvec"), col("norm2"), col("cnorm2")).as("cos"),
-          (-col("cent_id")).as("neg_cent")).as("cand"))
-    val assigned = scored.groupBy("id")
-      .agg(max(col("cand")).as("best"), first(col("vec")).as("vec"),
-        first(col("norm2")).as("norm2"))
-      .select(col("id"), col("vec"), col("norm2"), (-col("best.neg_cent")).as("cell"))
-    // the append writer must re-declare the table's bucket spec or Spark
-    // rejects it ("Specified bucketing does not match")
-    assigned.write.format("parquet")
-      .bucketBy(numBuckets, "cell").sortBy("cell")
-      .mode("append").saveAsTable(indexTable)
+    BucketedStore.appendBucketed(assignCells(withNorm2(newVecs, vecCol), idCol, vecCol,
+      spark.table(s"${indexTable}_centroids")), indexTable)
   }
 
   /** ANN top-k for a NEW query batch against a persisted
@@ -439,27 +434,24 @@ object Similarity {
   def ivfIndexTopK(queries: DataFrame, idCol: String, vecCol: String,
                    indexTable: String, k: Int, nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
-    validateIvfIndex(queries, idCol, vecCol, indexTable)
-    val cents = broadcast(spark.table(s"${indexTable}_centroids"))
-    val qscored = withNorm2(queries, vecCol)
-      .select(col(idCol).as("id_a"), col(vecCol).as("vec_a"), col("norm2").as("norm2_a"))
-      .crossJoin(cents)
-      .withColumn("qcos", cosine(col("vec_a"), col("cvec"), col("norm2_a"), col("cnorm2")))
-    import org.apache.spark.sql.expressions.Window
-    val wq = Window.partitionBy(col("id_a")).orderBy(col("qcos").desc, col("cent_id"))
-    val probes = qscored.withColumn("prank", row_number().over(wq))
-      .where(col("prank") <= nprobe)
-      .select(col("cent_id").as("cell"), col("id_a"), col("vec_a"), col("norm2_a"))
-    val idx = spark.table(indexTable)
-      .select(col("cell"), col("id").as("id_b"), col("vec").as("vec_b"),
-        col("norm2").as("norm2_b"))
-    val scored = idx.join(probes, "cell")
-      .where(col("id_a") =!= col("id_b"))
-      .withColumn("cos", cosine(col("vec_a"), col("vec_b"), col("norm2_a"), col("norm2_b")))
-    val w = Window.partitionBy(col("id_a")).orderBy(col("cos").desc, col("id_b"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"), col("rank"))
+    requireIvfIndex(queries, idCol, vecCol, indexTable)
+    val probes = probeCells(side(withNorm2(queries, vecCol), idCol, vecCol, "a"),
+      spark.table(s"${indexTable}_centroids"), nprobe)
+    cosineTopK(side(spark.table(indexTable), "id", "vec", "b", col("cell")).join(probes, "cell"), k)
+  }
+
+  /** SRP ANN top-k: the corpus is bucketed once by [[srpBucket]], each
+    * query row joins the corpus buckets `queryBucket` lists for it (a
+    * bucket column, or an `explode` of several), and the candidates are
+    * exact-reranked. Only the (tiny) query side fans out, before the
+    * broadcast join.
+    */
+  private def srpTopK(df: DataFrame, idCol: String, vecCol: String, queryPred: Column,
+                      k: Int, planes: Int, dims: Int, queryBucket: Column): DataFrame = {
+    val bucketed = withNorm2(df, vecCol)
+      .withColumn("bucket", srpBucket(col(vecCol), planes, dims))
+    val queries = side(bucketed.where(queryPred), idCol, vecCol, "a", queryBucket)
+    cosineTopK(side(bucketed, idCol, vecCol, "b", col("bucket")).join(broadcast(queries), "bucket"), k)
   }
 
   /** Multi-probe SRP ANN top-k: each query searches its own bucket PLUS
@@ -475,23 +467,9 @@ object Similarity {
   def srpMultiProbeTopK(df: DataFrame, idCol: String, vecCol: String,
                         queryPred: Column, k: Int, planes: Int,
                         dims: Int = DefaultDims): DataFrame = {
-    val bucketed = withNorm2(df, vecCol)
-      .withColumn("bucket", srpBucket(col(vecCol), planes, dims))
-    val corpus = bucketed.select(col("bucket"), col(idCol).as("id_b"),
-      col(vecCol).as("vec_b"), col("norm2").as("norm2_b"))
     val flips = array(
       col("bucket") +: (0 until planes).map(p => col("bucket").bitwiseXOR(lit(1L << p))): _*)
-    val queries = bucketed.where(queryPred)
-      .select(explode(flips).as("bucket"), col(idCol).as("id_a"),
-        col(vecCol).as("vec_a"), col("norm2").as("norm2_a"))
-    val scored = corpus.join(broadcast(queries), "bucket")
-      .where(col("id_a") =!= col("id_b"))
-      .withColumn("cos", cosine(col("vec_a"), col("vec_b"), col("norm2_a"), col("norm2_b")))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("id_a")).orderBy(col("cos").desc, col("id_b"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"), col("rank"))
+    srpTopK(df, idCol, vecCol, queryPred, k, planes, dims, explode(flips).as("bucket"))
   }
 
   /** One Lloyd iteration over the IVF cells: per-(cell, dimension) mean
@@ -528,22 +506,8 @@ object Similarity {
     */
   def lshBucketTopK(df: DataFrame, idCol: String, vecCol: String,
                     queryPred: Column, k: Int, planes: Int,
-                    dims: Int = DefaultDims): DataFrame = {
-    val bucketed = withNorm2(df, vecCol)
-      .withColumn("bucket", srpBucket(col(vecCol), planes, dims))
-    val corpus = bucketed.select(col("bucket"), col(idCol).as("id_b"),
-      col(vecCol).as("vec_b"), col("norm2").as("norm2_b"))
-    val queries = bucketed.where(queryPred).select(col("bucket"), col(idCol).as("id_a"),
-      col(vecCol).as("vec_a"), col("norm2").as("norm2_a"))
-    val scored = corpus.join(broadcast(queries), "bucket")
-      .where(col("id_a") =!= col("id_b"))
-      .withColumn("cos", cosine(col("vec_a"), col("vec_b"), col("norm2_a"), col("norm2_b")))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("id_a")).orderBy(col("cos").desc, col("id_b"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"), col("rank"))
-  }
+                    dims: Int = DefaultDims): DataFrame =
+    srpTopK(df, idCol, vecCol, queryPred, k, planes, dims, col("bucket"))
 
   // ---- product quantization (PQ / ADC) ------------------------------
 
@@ -556,6 +520,15 @@ object Similarity {
     df.select(col(idCol).as("id"),
       posexplode(array((0 until m).map(i =>
         slice(col(vecCol), i * subDim + 1, subDim)): _*)).as(Seq("sub", "svec")))
+
+  /** The PQ codebook: every subvector of the rows `codePred` selects is a
+    * codeword of its subspace, as (sub, code, cvec, cnorm2).
+    */
+  private def codebook(df: DataFrame, idCol: String, vecCol: String,
+                       codePred: Column, m: Int, subDim: Int): DataFrame =
+    subspaced(df.where(codePred), idCol, vecCol, m, subDim)
+      .select(col("sub"), col("id").as("code"), col("svec").as("cvec"),
+        dotDecimal(col("svec"), col("svec")).as("cnorm2"))
 
   /** Product-quantize the corpus: per subspace, assign every vector the
     * nearest codeword by squared L2 (argmin ‖x_m − c_m‖² ≡ argmax
@@ -575,9 +548,7 @@ object Similarity {
     */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                codePred: Column, m: Int, subDim: Int): DataFrame = {
-    val words = subspaced(df.where(codePred), idCol, vecCol, m, subDim)
-      .select(col("sub"), col("id").as("code"), col("svec").as("cvec"),
-        dotDecimal(col("svec"), col("svec")).as("cnorm2"))
+    val words = codebook(df, idCol, vecCol, codePred, m, subDim)
     // spread the ENCODE side: the ×m in-row fan-out, the broadcast-join
     // scoring against every codeword, and the partial argmax all run
     // upstream of the first exchange — on a single-split source that
@@ -591,11 +562,37 @@ object Similarity {
       .select(col("id"), col("sub"), (-col("best.neg_code")).as("code"))
   }
 
+  /** The two PQ tables of an ADC search: the corpus codes (id_b, sub,
+    * code) and each query's exact distance table to every (sub,
+    * codeword), d²(q_m, c) = ‖q_m‖² − 2·q_m·c + ‖c‖² in decimal
+    * arithmetic, as (id_a, sub, code, d2).
+    */
+  private def adcTables(df: DataFrame, idCol: String, vecCol: String,
+                        codePred: Column, queryPred: Column,
+                        m: Int, subDim: Int): (DataFrame, DataFrame) = {
+    val codes = pqEncode(df, idCol, vecCol, codePred, m, subDim)
+      .select(col("id").as("id_b"), col("sub"), col("code"))
+    val lut = subspaced(df.where(queryPred), idCol, vecCol, m, subDim)
+      .withColumn("qnorm2", dotDecimal(col("svec"), col("svec")))
+      .join(broadcast(codebook(df, idCol, vecCol, codePred, m, subDim)), "sub")
+      .select(col("id").as("id_a"), col("sub"), col("code"),
+        (col("qnorm2") - dotDecimal(col("svec"), col("cvec")) * 2 + col("cnorm2")).as("d2"))
+    (codes, lut)
+  }
+
+  /** ADC top-k over the looked-up distance terms (id_a, id_b, d2) of the
+    * candidate pairs: a pair's m terms summed (map-side combined),
+    * smallest sum first, reported at 6 decimals as `adc_dist`.
+    */
+  private def adcTopK(terms: DataFrame, k: Int): DataFrame =
+    rankTopK(terms.groupBy("id_a", "id_b").agg(sum(col("d2")).as("adc2")),
+      col("adc2").asc, k, round(col("adc2").cast("double"), 6).as("adc_dist"))
+
   /** Asymmetric-distance (ADC) top-k over the PQ codes: each query
-    * computes one exact distance table to every (sub, codeword) —
-    * d²(q_m, c) = ‖q_m‖² − 2·q_m·c + ‖c‖², decimal-exact — and a corpus
-    * vector's approximate distance is the sum of its m table lookups.
-    * Smallest sum wins; ties break to the smaller corpus id.
+    * computes one exact distance table to every (sub, codeword)
+    * ([[adcTables]]) and a corpus vector's approximate distance is the
+    * sum of its m table lookups. Smallest sum wins; ties break to the
+    * smaller corpus id.
     *
     * Scale design: the distance tables are |queries|·m·K tiny rows —
     * broadcast; the corpus side contributes only its code rows (no
@@ -608,25 +605,8 @@ object Similarity {
   def pqAdcTopK(df: DataFrame, idCol: String, vecCol: String,
                 codePred: Column, queryPred: Column,
                 m: Int, subDim: Int, k: Int): DataFrame = {
-    val words = subspaced(df.where(codePred), idCol, vecCol, m, subDim)
-      .select(col("sub"), col("id").as("code"), col("svec").as("cvec"),
-        dotDecimal(col("svec"), col("svec")).as("cnorm2"))
-    val codes = pqEncode(df, idCol, vecCol, codePred, m, subDim)
-      .select(col("id").as("id_b"), col("sub"), col("code"))
-    val lut = subspaced(df.where(queryPred), idCol, vecCol, m, subDim)
-      .withColumn("qnorm2", dotDecimal(col("svec"), col("svec")))
-      .join(broadcast(words), "sub")
-      .select(col("id").as("id_a"), col("sub"), col("code"),
-        (col("qnorm2") - dotDecimal(col("svec"), col("cvec")) * 2 + col("cnorm2")).as("d2"))
-    val scored = codes.join(broadcast(lut), Seq("sub", "code"))
-      .where(col("id_a") =!= col("id_b"))
-      .groupBy("id_a", "id_b").agg(sum(col("d2")).as("adc2"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("id_a")).orderBy(col("adc2").asc, col("id_b"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("id_a"), col("id_b"),
-        round(col("adc2").cast("double"), 6).as("adc_dist"), col("rank"))
+    val (codes, lut) = adcTables(df, idCol, vecCol, codePred, queryPred, m, subDim)
+    adcTopK(codes.join(broadcast(lut), Seq("sub", "code")).where(col("id_a") =!= col("id_b")), k)
   }
 
   /** IVF-PQ: the coarse quantizer ([[ivfTopK]]'s cosine cells) restricts
@@ -649,51 +629,24 @@ object Similarity {
                 centroidPred: Column, codePred: Column, queryPred: Column,
                 m: Int, subDim: Int, k: Int, nprobe: Int): DataFrame = {
     val corpus0 = ivfCorpus(df, vecCol)
+    val cents = centroids(corpus0, idCol, vecCol, centroidPred)
     // coarse cells for the corpus (persisted: reused by the pair join
     // and — via the shared plan — by nothing else; cheap to keep)
-    val assigned = assignCells(corpus0, idCol, vecCol, centroidPred)
+    val assigned = assignCells(corpus0, idCol, vecCol, cents)
       .select(col("id").as("id_b"), col("cell"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // per-query probe cells: rank the broadcast codebook, keep nprobe
-    import org.apache.spark.sql.expressions.Window
-    val qscored = corpus0.where(queryPred)
-      .select(col(idCol).as("id_a"), col(vecCol).as("vec_a"), col("norm2").as("norm2_a"))
-      .crossJoin(broadcast(
-        corpus0.where(centroidPred)
-          .select(col(idCol).as("cent_id"), col(vecCol).as("cvec"), col("norm2").as("cnorm2"))))
-      .withColumn("qcos", cosine(col("vec_a"), col("cvec"), col("norm2_a"), col("cnorm2")))
-    val wq = Window.partitionBy(col("id_a")).orderBy(col("qcos").desc, col("cent_id"))
-    val probes = qscored.withColumn("prank", row_number().over(wq))
-      .where(col("prank") <= nprobe)
-      .select(col("cent_id").as("cell"), col("id_a"))
-    // PQ codes for the whole corpus + per-query distance LUTs, exactly
-    // as in pqAdcTopK (same codebook rule, same decimal arithmetic)
-    val words = subspaced(df.where(codePred), idCol, vecCol, m, subDim)
-      .select(col("sub"), col("id").as("code"), col("svec").as("cvec"),
-        dotDecimal(col("svec"), col("svec")).as("cnorm2"))
-    val codes = pqEncode(df, idCol, vecCol, codePred, m, subDim)
-      .select(col("id").as("id_b"), col("sub"), col("code"))
-    val lut = subspaced(df.where(queryPred), idCol, vecCol, m, subDim)
-      .withColumn("qnorm2", dotDecimal(col("svec"), col("svec")))
-      .join(broadcast(words), "sub")
-      .select(col("id").as("id_a"), col("sub"), col("code"),
-        (col("qnorm2") - dotDecimal(col("svec"), col("cvec")) * 2 + col("cnorm2")).as("d2"))
+    val probes = probeCells(side(corpus0.where(queryPred), idCol, vecCol, "a"), cents, nprobe)
+      .select("cell", "id_a")
+    val (codes, lut) = adcTables(df, idCol, vecCol, codePred, queryPred, m, subDim)
     // candidate pairs = corpus members of probed cells (never all pairs)
     val pairs = assigned.join(broadcast(probes), "cell")
       .where(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b")
-    // ADC: m LUT lookups per pair, map-side-combined sum. The join on
-    // (id_a, sub, code) is total for every pair by construction (the
-    // LUT covers all (query, sub, codeword) triples), so no subspace
-    // term can silently drop out of a sum.
-    val scored = pairs.join(codes, "id_b")
-      .join(broadcast(lut), Seq("id_a", "sub", "code"))
-      .groupBy("id_a", "id_b").agg(sum(col("d2")).as("adc2"))
-    val w = Window.partitionBy(col("id_a")).orderBy(col("adc2").asc, col("id_b"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("id_a"), col("id_b"),
-        round(col("adc2").cast("double"), 6).as("adc_dist"), col("rank"))
+    // ADC: m LUT lookups per pair. The join on (id_a, sub, code) is
+    // total for every pair by construction (the LUT covers all (query,
+    // sub, codeword) triples), so no subspace term can silently drop out
+    // of a sum.
+    adcTopK(pairs.join(codes, "id_b").join(broadcast(lut), Seq("id_a", "sub", "code")), k)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -723,18 +676,16 @@ object Similarity {
                     centroidPred: Column, tau: Double,
                     reliable: Boolean = false): DataFrame = {
     val corpus0 = ivfCorpus(df, vecCol)
+    val cents = centroids(corpus0, idCol, vecCol, centroidPred)
     // persisted: feeds the centroid-cos join, BOTH sides of the
     // within-cell pair join, and the final labeling join
-    val withCent = assignCells(corpus0, idCol, vecCol, centroidPred)
-      .join(broadcast(corpus0.where(centroidPred)
-        .select(col(idCol).as("cell"), col(vecCol).as("cvec"), col("norm2").as("cnorm2"))), "cell")
+    val withCent = assignCells(corpus0, idCol, vecCol, cents)
+      .join(broadcast(cents.withColumnRenamed("cent_id", "cell")), "cell")
       .select(col("id"), col("cell"), col("vec"), col("norm2"),
         cosine(col("vec"), col("cvec"), col("norm2"), col("cnorm2")).as("cent_cos"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = withCent.select(col("cell"), col("id").as("id_a"),
-      col("vec").as("vec_a"), col("norm2").as("norm2_a"))
-    val b = withCent.select(col("cell"), col("id").as("id_b"),
-      col("vec").as("vec_b"), col("norm2").as("norm2_b"))
+    val a = side(withCent, "id", "vec", "a", col("cell"))
+    val b = side(withCent, "id", "vec", "b", col("cell"))
     // cell-local near-dup edges; shuffle join on the cell id so the
     // persisted assignment subtree is scanned, not broadcast-copied
     val edges = a.join(b.hint("shuffle_merge"), Seq("cell"))

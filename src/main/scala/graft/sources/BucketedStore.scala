@@ -22,23 +22,83 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The reference stores workload tables in Postgres and leaves layout to
   * the DB (dqo/db/clients/postgres.py:241-317); here layout is a
   * first-class engine capability.
+  *
+  * **Persisted-index contract.** The LSH index (`Dedup.buildLshIndex`)
+  * and the IVF index (`Similarity.buildIvfIndex`) are bucketed tables
+  * that this object writes, checks and grows, so both follow one
+  * contract:
+  *  - [[writeBucketed]] stamps the build parameters as `graft.*` table
+  *    properties;
+  *  - [[requireProperties]] fails a probe or append whose parameters
+  *    differ from them (a missing property reads `<missing>`);
+  *  - [[appendBucketed]] adds a batch under the bucket key and count the
+  *    catalog holds for the table;
+  *  - [[compactBucketed]] rewrites the accreted files one per bucket and
+  *    keeps the `graft.*` properties.
   */
 object BucketedStore {
 
   /** Write `df` as a bucketed, bucket-sorted parquet table registered in
-    * the session catalog. `numBuckets` sizes the parallelism of every
-    * downstream co-located join/agg on `keyCol` — at 100 TB pick it so a
-    * bucket fits an executor's memory (e.g. 2048 buckets for ~50 GB/b at
-    * 100 TB); bucket counts must match on both join sides.
+    * the session catalog, with `properties` stamped on it. `numBuckets`
+    * sizes the parallelism of every downstream co-located join/agg on
+    * `keyCol` — at 100 TB pick it so a bucket fits an executor's memory
+    * (e.g. 2048 buckets for ~50 GB/b at 100 TB); bucket counts must match
+    * on both join sides.
     */
   def writeBucketed(df: DataFrame, table: String, keyCol: String,
-                    numBuckets: Int, path: String): Unit =
-    df.write.format("parquet")
-      .bucketBy(numBuckets, keyCol)
-      .sortBy(keyCol)
-      .option("path", path)
-      .mode("overwrite")
-      .saveAsTable(table)
+                    numBuckets: Int, path: String,
+                    properties: Map[String, String] = Map.empty): Unit = {
+    bucketedWriter(df, keyCol, numBuckets).option("path", path).mode("overwrite").saveAsTable(table)
+    stamp(df.sparkSession, table, properties)
+  }
+
+  /** Append `df` to the bucketed `table` under the bucket key and count
+    * its catalog entry holds: an append writer that does not re-declare
+    * them is rejected ("Specified bucketing does not match").
+    */
+  def appendBucketed(df: DataFrame, table: String): Unit = {
+    val (_, key, n) = bucketSpec(df.sparkSession, table)
+    bucketedWriter(df, key, n).mode("append").saveAsTable(table)
+  }
+
+  /** Fail unless `table` carries each of the `expected` properties with
+    * the same value. A missing property fails too, so a table that was
+    * not built with them never passes as matching.
+    */
+  def requireProperties(spark: SparkSession, table: String,
+                        expected: Map[String, String]): Unit = {
+    val props = metadata(spark, table).properties
+    val bad = expected.filter { case (p, v) => !props.get(p).contains(v) }
+    require(bad.isEmpty,
+      s"index $table was built with different parameters: " +
+        bad.map { case (p, v) => s"$p: caller=$v index=${props.getOrElse(p, "<missing>")}" }
+          .mkString("; "))
+  }
+
+  private def bucketedWriter(df: DataFrame, key: String, numBuckets: Int) =
+    df.write.format("parquet").bucketBy(numBuckets, key).sortBy(key)
+
+  private def stamp(spark: SparkSession, table: String, properties: Map[String, String]): Unit =
+    if (properties.nonEmpty)
+      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES(" +
+        properties.map { case (k, v) => s"'$k'='$v'" }.mkString(",") + ")")
+
+  private def metadata(spark: SparkSession, table: String) =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table))
+
+  /** `table`'s catalog entry with its single bucket column and bucket
+    * count.
+    */
+  private def bucketSpec(spark: SparkSession, table: String) = {
+    val meta = metadata(spark, table)
+    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
+      s"$table has no bucket spec — use compact() on its directory instead"))
+    require(spec.bucketColumnNames.size == 1,
+      s"$table buckets on ${spec.bucketColumnNames.mkString(",")} — only " +
+        "single-column bucket specs are supported")
+    (meta, spec.bucketColumnNames.head, spec.numBuckets)
+  }
 
   /** Write `df` partitioned by directory on `partCols` (low-cardinality
     * columns only — each distinct tuple becomes a directory).
@@ -181,34 +241,26 @@ object BucketedStore {
   private val BucketFileName = """_\d{5}\.c\d{3}""".r
 
   /** Bucket-PRESERVING compaction for incremental-index tables.
-    * [[graft.ops.Dedup.appendToLshIndex]] / appendToIvfIndex add
-    * `numBuckets` files per batch, so a long-lived index accretes
-    * thousands of small files per bucket — but the flat [[compact]]
+    * [[appendBucketed]] adds up to `numBuckets` files per writing task,
+    * so a long-lived index accretes thousands of small files per
+    * bucket — but the flat [[compact]]
     * would destroy the bucket-file mapping the shuffle-free probes
     * depend on. This rewrite goes through the catalog instead:
     * `repartition(numBuckets, key)` pre-shapes the data to EXACTLY the
     * bucket hash (repartition and bucketBy share Murmur3 pmod
     * semantics, so each task holds exactly one bucket → exactly one
     * file per bucket), written as a staging table + catalog rename so a
-    * failure mid-rewrite never leaves the index name dangling. Table
-    * properties (the graft.lsh.* / graft.ivf.* probe contracts) are
-    * re-applied to the staging table before the swap. The table's
+    * failure mid-rewrite never leaves the index name dangling. The
+    * `graft.*` table properties (the index contract) are re-stamped on
+    * the staging table before the swap. The table's
     * LOCATION alternates between `<path>` and `<path>_swap` across
     * compactions (a table cannot be overwritten from itself in one
     * pass); callers must address the index by table name, not path.
     * Returns the output file count (== numBuckets).
     */
   def compactBucketed(spark: SparkSession, table: String): Int = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
     import org.apache.spark.sql.functions.col
-    val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$table has no bucket spec — use compact() on its directory instead"))
-    require(spec.bucketColumnNames.size == 1,
-      s"$table buckets on ${spec.bucketColumnNames.mkString(",")} — only " +
-        "single-column bucket specs are supported")
-    val key = spec.bucketColumnNames.head
-    val n = spec.numBuckets
+    val (meta, key, n) = bucketSpec(spark, table)
     val oldLoc = new org.apache.hadoop.fs.Path(meta.location)
     val fs = oldLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val newLoc =
@@ -227,16 +279,8 @@ object BucketedStore {
     // The exchange is a REPARTITION_BY_NUM one, which AQE's local shuffle
     // read never rewrites, so each write task holds one bucket whatever
     // the caller's local-shuffle-read setting.
-    spark.read.parquet(oldLoc.toString)
-      .repartition(n, col(key))
-      .write.format("parquet")
-      .bucketBy(n, key).sortBy(key)
-      .option("path", newLoc.toString)
-      .saveAsTable(staging)
-    val graftProps = meta.properties.filter(_._1.startsWith("graft."))
-    if (graftProps.nonEmpty)
-      spark.sql(s"ALTER TABLE $staging SET TBLPROPERTIES(" +
-        graftProps.map { case (k, v) => s"'$k'='$v'" }.mkString(",") + ")")
+    writeBucketed(spark.read.parquet(oldLoc.toString).repartition(n, col(key)),
+      staging, key, n, newLoc.toString, meta.properties.filter(_._1.startsWith("graft.")))
     spark.sql(s"DROP TABLE $table")
     spark.sql(s"ALTER TABLE $staging RENAME TO $table")
     fs.delete(oldLoc, true)

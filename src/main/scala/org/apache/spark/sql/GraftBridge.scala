@@ -47,30 +47,28 @@ object GraftBridge {
   def internalRows(df: DataFrame): RDD[InternalRow] =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
 
-  /** Spark's own cast of a double to `to`, evaluated on the driver under
-    * `spark`'s conf: null where Spark's cast is null (NaN or infinity to
-    * a decimal), and Spark's error where it fails (a decimal overflow
-    * under ANSI mode). One function per thread: it reuses its input row.
+  /** Spark's own `try_cast` of a double to `to`, evaluated on the driver
+    * in `spark`'s session time zone: null where Spark's `try_cast` is
+    * null (NaN, infinity, or a value beyond a decimal's range). One
+    * function per thread: it reuses its input row.
     */
-  def doubleCast(spark: SparkSession, to: DataType): Double => Any = {
-    val conf = sqlConf(spark)
+  def doubleTryCast(spark: SparkSession, to: DataType): Double => Any = {
     val cast = Cast(BoundReference(0, DoubleType, nullable = false), to,
-      Some(conf.sessionLocalTimeZone), EvalMode.fromSQLConf(conf))
+      Some(sqlConf(spark).sessionLocalTimeZone), EvalMode.TRY)
     val row = new GenericInternalRow(1)
     d => { row.update(0, d); cast.eval(row) }
   }
 
-  /** Spark's `avg` of decimal values of type `in` with exact sum `sum`
+  /** Spark's `try_avg` of decimal values of type `in` with exact sum `sum`
     * over `count` non-null values: the sum divided as `Average` divides
     * it, at avg's result type decimal(p + 4, s + 4) (bounded). None where
-    * Spark's avg is null.
+    * `try_avg` is null: no values, or a mean beyond the result type.
     */
-  def decimalAvg(spark: SparkSession, sum: java.math.BigDecimal, count: Long,
-                 in: DecimalType): Option[Decimal] = {
+  def decimalTryAvg(sum: java.math.BigDecimal, count: Long, in: DecimalType): Option[Decimal] = {
     val out = DecimalType.bounded(in.precision + 4, in.scale + 4)
     if (count == 0L) None
     else Option((Decimal(sum) / Decimal(count)).toPrecision(out.precision, out.scale,
-      Decimal.ROUND_HALF_UP, !sqlConf(spark).ansiEnabled, null))
+      Decimal.ROUND_HALF_UP, nullOnOverflow = true, null))
   }
 
   private def sqlConf(spark: SparkSession): SQLConf =

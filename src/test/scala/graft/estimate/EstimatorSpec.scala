@@ -38,6 +38,15 @@ class EstimatorSpec extends AnyFunSuite {
       Estimator.featurizeWith(db, sqls.head, "nope"))
   }
 
+  test("evaluate takes the MAE in the bucket space") {
+    val label = math.log(0.05) / math.log(2)  // a 0.05 s query, log2 ≈ -4.32
+    val (acc, mae, _) = Estimator.evaluate(Seq((0.0, label)), minBucket = 0)
+    assert(acc == 1.0 && mae == 0.0, s"acc=$acc mae=$mae")
+    // inside the range the MAE stays the raw log2 distance
+    val (_, inRange, _) = Estimator.evaluate(Seq((1.5, 3.0), (9.0, 7.0)), minBucket = 0)
+    assert(inRange == (1.5 + 1.0) / 2)
+  }
+
   test("gerelt_v20 featurizes over the plan-merged tree and refuses to run plan-less") {
     import graft.lab.ExecOp
     def scan(t: String) = ExecOp("Scan", t, Nil, None)

@@ -79,7 +79,7 @@ class ScoringSpec extends AnyFunSuite {
     assert(badEst.isNaN)
   }
 
-  test("scoreWorkloadV20 regressor matches driver-side tree predictions") {
+  test("scoreWorkloadAny matches driver-side v20 gru4 tree predictions") {
     val Dim = 203
     def tree(sql: String): Gru4.Tree = {
       val (parents, vecs) = graft.encode.SetEncoders.treeWithParents(db, sql)
@@ -96,7 +96,7 @@ class ScoringSpec extends AnyFunSuite {
 
     import spark.implicits._
     val workload = (sqls :+ "SELECT MIN(nope.z) FROM nope").toDF("sql")
-    val scored = Scoring.scoreWorkloadV20(spark, workload, "sql",
+    val scored = Scoring.scoreWorkloadAny(spark, workload, "sql",
       modelJson, ModelJson.toJson(db))
     assert(!scored.queryExecution.executedPlan.toString.contains("Exchange"))
 
@@ -170,14 +170,11 @@ class ScoringSpec extends AnyFunSuite {
         s"$family must keep unbindable rows")
     }
 
-    // the narrow entries refuse a checkpoint of the wrong family
+    // the bucket-classifier entry refuses a checkpoint of the wrong family
     val tlJson = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$dir/treelstm.json"))
     intercept[IllegalArgumentException] {
       Scoring.scoreWorkload(spark, workload, "sql", tlJson, statsJson)
-    }
-    intercept[IllegalArgumentException] {
-      Scoring.scoreWorkloadV20(spark, workload, "sql", tlJson, statsJson)
     }
   }
 }

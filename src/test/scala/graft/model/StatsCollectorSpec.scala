@@ -149,6 +149,23 @@ class StatsCollectorSpec extends AnyFunSuite {
     }
   }
 
+  test("doubles beyond the decimal mean's domain leave the mean, not fail the table") {
+    // ±1e300 overflow decimal(38,6) and are skipped as ±Infinity is;
+    // 5e31 fits it, but the mean it makes does not fit avg's decimal(38,10)
+    val schema = StructType(Seq(StructField("wide", DoubleType), StructField("tall", DoubleType)))
+    val data = Seq(Row(1e300, 5e31), Row(-1e300, 1.0), Row(2.0, 1.0), Row(4.0, null))
+    val Seq(driver, distributed) = paths.map { s =>
+      StatsCollector.collectTable(
+        s.createDataFrame(java.util.Arrays.asList(data: _*), schema), "far", 0L)
+    }
+    assert(json(driver) == json(distributed),
+      s"the driver finish and the scans disagree\n${json(driver)}\n${json(distributed)}")
+    def numeric(c: String) = driver.columnsByName(c).stats.get.numeric.get
+    assert(numeric("wide").mean == 3.0)
+    assert(numeric("wide").min == -1e300 && numeric("wide").max == 1e300)
+    assert(numeric("tall").mean.isNaN)
+  }
+
   test("a small table takes one Spark job, and leaves no conf change or persisted RDD") {
     val s = graft.LocalSpark.session()
     val sc = s.sparkContext

@@ -101,4 +101,17 @@ class IvfIndexSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("graft.ivf.idCol"))
   }
+
+  test("probing a table not built by buildIvfIndex (no properties) fails fast") {
+    // a bucketed table of the index's shape but none of the graft.ivf.*
+    // properties — must NOT silently serve
+    val fake = embeddings.where(col("vec_id") < 4)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"), lit(0).as("cell"))
+    BucketedStore.writeBucketed(fake, "not_an_ivf_index", "cell", 4, s"$warehouse/not_an_ivf_index")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfIndexTopK(embeddings.where(col("vec_id") === 3L), "vec_id", "embedding",
+        "not_an_ivf_index", k = 3, nprobe = 2)
+    }
+    assert(e.getMessage.contains("<missing>"))
+  }
 }

@@ -151,6 +151,59 @@ class BucketedStoreSpec extends AnyFunSuite {
     assert(probe().collect().map(_.toSeq).toSet == before)
   }
 
+  /** Fail unless the shuffle join in `df`'s finalized plan whose side
+    * scans `table` reads that side's buckets in place.
+    */
+  private def assertIndexSideShuffleFree(df: org.apache.spark.sql.DataFrame, table: String): Unit = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    def scansIndex(p: SparkPlan): Boolean = BucketedStore.planNodes(p).exists {
+      case s: FileSourceScanExec => s.tableIdentifier.exists(_.table == table)
+      case _ => false
+    }
+    val join = BucketedStore.planNodes(df.queryExecution.executedPlan).collect {
+      case j: SortMergeJoinExec => j: SparkPlan
+      case j: ShuffledHashJoinExec => j: SparkPlan
+    }.find(_.children.exists(scansIndex))
+      .getOrElse(fail(s"no shuffle join over $table in plan:\n${df.queryExecution.executedPlan}"))
+    val idxSide = join.children.find(scansIndex).get
+    assert(!BucketedStore.subtreeHasShuffle(idxSide), s"$table index side shuffled:\n$idxSide")
+  }
+
+  test("LSH and IVF indexes serve a batch appended after compaction, shuffle-free") {
+    import graft.ops.{Dedup, Similarity}
+    // LSH: build, compact, append, then probe with copies of the batch
+    val docs = graft.lab.ScaleRehearsal.syntheticDocs(spark, 300)
+    Dedup.buildLshIndex(docs.where(col("doc_id") < 250), "doc_id", "text", k = 16, shingleN = 3,
+      bands = 4, table = "lsh_grow", path = s"$warehouse/lsh_grow", numBuckets = 4)
+    assert(BucketedStore.compactBucketed(spark, "lsh_grow") == 4)
+    val docBatch = docs.where(col("doc_id") >= 250)
+    Dedup.appendToLshIndex(docBatch, "doc_id", "text", 16, 3, 4, "lsh_grow")
+    val lshProbe = Dedup.incrementalLshCandidates(
+      docBatch.select((col("doc_id") + 10000L).as("doc_id"), col("text")),
+      "doc_id", "text", 16, 3, 4, "lsh_grow")
+    val lshPairs = lshProbe.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    for (d <- 250L until 300L)
+      assert(lshPairs.contains((d + 10000L, d)), s"appended doc $d not found: $lshPairs")
+    assertIndexSideShuffleFree(lshProbe, "lsh_grow")
+
+    // IVF: the same lifecycle; a copy of an appended vector ranks its
+    // original first (cosine 1.0)
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet").select("vec_id", "embedding")
+    Similarity.buildIvfIndex(vecs.where(col("vec_id") < 400), "vec_id", "embedding",
+      col("vec_id") % 32 === 0, "ivf_grow", s"$warehouse/ivf_grow", numBuckets = 4)
+    assert(BucketedStore.compactBucketed(spark, "ivf_grow") == 4)
+    val vecBatch = vecs.where(col("vec_id") >= 400 && col("vec_id") < 410)
+    Similarity.appendToIvfIndex(vecBatch, "vec_id", "embedding", "ivf_grow")
+    val ivfProbe = Similarity.ivfIndexTopK(
+      vecBatch.select((col("vec_id") + 100000L).as("vec_id"), col("embedding")),
+      "vec_id", "embedding", "ivf_grow", k = 3, nprobe = 2)
+    val ivfPairs = ivfProbe.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    for (v <- 400L until 410L)
+      assert(ivfPairs.contains((v + 100000L, v)), s"appended vector $v not served: $ivfPairs")
+    assertIndexSideShuffleFree(ivfProbe, "ivf_grow")
+  }
+
   test("partitionBy write prunes directories under a partition predicate") {
     val events = spark.read.parquet(s"$sf/events.parquet")
     val dir = s"$warehouse/events_p"
